@@ -33,9 +33,9 @@ def store_linenoise_notch_CAR(elec_series, processing, mean_frac=.95,
                               round_func=np.ceil, precision="single"):
     """Fused notch+CAR store (pipelines.py:114-173) — env-gated; the
     engine's fused form is operators.kernel_ops.car_wavelet_arrow one
-    stage later (and fused_ops for resample+notch)."""
+    stage later (and fused_ops_arrow for resample+notch)."""
     require_pynwb(
         "store_linenoise_notch_CAR",
-        "operators.kernel_ops.fused_ops(notch) + operators.car."
+        "operators.kernel_ops.fused_ops_arrow(notch) + operators.car."
         "subtract_car_packed, persisted via sources.catalog.SignalCatalog "
         "under the 'CAR_ln_' lineage name")

@@ -2,11 +2,12 @@
 
 These are ndarray -> ndarray functions with the same math as the reference
 (fresh implementations on numpy.fft; scipy is unavailable here). They are
-invoked per (series_id, channel) group inside Arrow-batched Spark kernels
-(`applyInPandas`), i.e. one task per channel — which is the distributed
-replacement for the reference's per-channel loop (resample.py:142-147) and
-its `workers=-1` FFT threading (we deliberately stay single-threaded per
-task: Spark supplies the core-level parallelism).
+invoked per (series_id, channel) row inside the Arrow Spark kernels
+(`mapInArrow` / `applyInArrow`, operators/kernel_ops.py), i.e. one task per
+channel — which is the distributed replacement for the reference's
+per-channel loop (resample.py:142-147) and its `workers=-1` FFT threading
+(we deliberately stay single-threaded per task: Spark supplies the
+core-level parallelism).
 
 Behavioral parity targets (see SURVEY.md §2A):
 - resample: /root/reference/src/process_nwb/resample.py:43-153

@@ -118,43 +118,21 @@ def subtract_car(df: DataFrame, mean_frac: float = 0.95,
 
 def subtract_car_packed(packed: DataFrame, mean_frac: float = 0.95,
                         precision: str = "single") -> DataFrame:
-    """X - CAR(X) on the *packed* layout: one `applyInPandas` group per
-    series gathers its channels, the dense kernel (dsp.kernels.subtract_car,
-    parity common_referencing.py:45-68) does the per-timepoint trimmed mean
-    in numpy, and rows come back still packed.
+    """X - CAR(X) on the *packed* layout: the per-series Arrow group map
+    (operators/kernel_ops._car_group_map) gathers a series' channels, the
+    dense kernel (dsp.kernels.subtract_car, parity
+    common_referencing.py:45-68) does the per-timepoint trimmed mean in
+    numpy, and rows come back still packed.
 
     This is the pipeline's physical fast path: the shuffle moves n_channels
     packed rows per series (arrays), not n_time*n_channels long rows — at
     32 ch x 10 s x 1.6 kHz that is 32 rows vs 512k. The relational
     formulation (car_column/car_df above) remains the queryable/oracled
-    face of the same operator.
+    face of the same operator."""
+    from .kernel_ops import PACKED_SCHEMA, _car_group_map, _values_rows
 
-    Scale bound: one group = one series' (n_time x n_channels) block. For
-    recordings past executor memory, split series into bounded segments
-    upstream (CAR is per-timepoint, so segmenting is exact — no pad overlap
-    needed, unlike the FFT stages)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..dsp import kernels as K
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["channel"].to_numpy())
-        pdf = pdf.iloc[order]
-        X = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["values"]], axis=1)
-        out = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
-                                        precision=precision), dtype=np.float64)
-        return pd.DataFrame({
-            "series_id": pdf["series_id"].values,
-            "channel": pdf["channel"].values,
-            "values": [out[:, i] for i in range(out.shape[1])],
-        })
-
-    return packed.groupBy("series_id").applyInPandas(
-        fn, "series_id STRING, channel INT, values ARRAY<DOUBLE>")
+    return _car_group_map(packed, _values_rows(lambda x: x), PACKED_SCHEMA,
+                          mean_frac, precision)
 
 
 def car_df(df: DataFrame, mean_frac: float = 0.95,

@@ -1,9 +1,18 @@
 """Spark operators wrapping the NumPy spectral kernels.
 
 All operate on the *packed* layout (one row per channel, full time axis in
-an ARRAY<DOUBLE>) via `mapInPandas` — a narrow transformation: after the
-single pack() shuffle, any chain of these runs pipelined inside one stage,
-one Arrow round-trip per operator (or one total with `fused_ops`).
+an ARRAY<DOUBLE>) and cross into Python through Arrow only, by two maps:
+
+- the row map (`_map_values_arrow`, `mapInArrow`) — narrow: after the
+  single pack() shuffle, any chain of these runs pipelined inside one
+  stage, one crossing per operator (or one total with `fused_ops_arrow`);
+- the per-series group map (`_car_group_map`, `applyInArrow`) — gathers a
+  series' channels for the CAR, optionally followed by the wavelet.
+
+Both hand channel arrays to an emitter: `_values_rows` (one packed row per
+channel) or `_band_rows` (the band table, one row per channel x band).
+Signal arrays cross as one flat float64 buffer + offsets in both
+directions, never as per-row boxed objects.
 
 Scale note (100 TB): parallelism = n_series x n_channels tasks; a channel's
 array must fit in one task (~1e8 float64 samples = 800 MB upper bound).
@@ -13,33 +22,15 @@ already use (see SURVEY.md §7 "whole-axis FFT vs partitioned data").
 """
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..dsp import kernels as K
+from .repack import KEYS
 
 PACKED_SCHEMA = "series_id STRING, channel INT, values ARRAY<DOUBLE>"
-
-
-def _map_values(df: DataFrame, fn) -> DataFrame:
-    """Apply `fn(np.ndarray (n_time,)) -> np.ndarray` to each packed row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = [np.asarray(fn(np.asarray(v, dtype=np.float64)), dtype=np.float64)
-                   for v in pdf["values"]]
-            yield pd.DataFrame({
-                "series_id": pdf["series_id"].values,
-                "channel": pdf["channel"].values,
-                "values": out,
-            })
-
-    return df.mapInPandas(run, PACKED_SCHEMA)
+WAVELET_SCHEMA = ("series_id STRING, channel INT, band INT, cf DOUBLE, "
+                  "sd DOUBLE, amp ARRAY<DOUBLE>, phase ARRAY<DOUBLE>")
 
 
 def scale_packed(df: DataFrame, scaling: float) -> DataFrame:
@@ -48,35 +39,6 @@ def scale_packed(df: DataFrame, scaling: float) -> DataFrame:
 
     return df.withColumn(
         "values", F.transform("values", lambda v: v * F.lit(float(scaling))))
-
-
-def resample_op(df: DataFrame, new_freq: float, old_freq: float,
-                npad="fast", precision: str = "single") -> DataFrame:
-    """FFT rational resample of every channel. Parity: resample.py:105-153."""
-    return _map_values(
-        df, lambda x: K.resample(x, new_freq, old_freq, npad=npad,
-                                 precision=precision))
-
-
-def notch_op(df: DataFrame, rate: float, noise_hz: float = 60.0,
-             npad="fast", precision: str = "single") -> DataFrame:
-    """60 Hz + harmonics notch. Parity: linenoise_notch.py:55-92."""
-    return _map_values(
-        df, lambda x: K.apply_linenoise_notch(x, rate, noise_hz=noise_hz,
-                                              npad=npad, precision=precision))
-
-
-def fused_ops(df: DataFrame, *fns) -> DataFrame:
-    """Chain ndarray->ndarray kernels in ONE Python crossing (the Spark
-    analog of the reference's fused notch+CAR stage pipelines.py:114-173 —
-    here used for resample+notch, which are adjacent per-channel stages)."""
-
-    def chained(x):
-        for f in fns:
-            x = f(x)
-        return x
-
-    return _map_values(df, chained)
 
 
 def _list_col_to_numpy(col):
@@ -138,156 +100,165 @@ def _bounded_row_groups(arrays, cap=2 ** 30):
         lo = hi
 
 
-def _map_values_arrow(df: DataFrame, fn) -> DataFrame:
-    """Arrow-native twin of _map_values: same narrow per-row kernel map,
-    but via mapInArrow — the ARRAY<DOUBLE> column crosses as one flat
-    float64 buffer + offsets instead of a pandas object Series of boxed
-    per-row ndarrays, in both directions. Math-identical to _map_values
-    (same fn over the same float64 views; pinned near-bitwise in
-    tests/test_spark_operators.py — the FFT itself has ULP-level
-    run-to-run alignment jitter)."""
+def _values_rows(fn):
+    """Emitter: channel i (keys row i, array xs[i]) -> one packed row
+    `fn(xs[i])`, in record batches of bounded flattened length (an
+    upsampling fn can grow the output past the int32 offset ceiling)."""
     import pyarrow as pa
+
+    def emit(keys, xs):
+        outs = [np.ascontiguousarray(np.asarray(fn(x), dtype=np.float64))
+                for x in xs]
+        for lo, hi in _bounded_row_groups(outs):
+            k = keys.slice(lo, hi - lo)
+            yield pa.RecordBatch.from_arrays(
+                [k.column(0), k.column(1), _pack_list_array(outs[lo:hi])],
+                [*KEYS, "values"])
+
+    return emit
+
+
+def _band_rows(rate: float, filters: str, hg_only: bool, abs_only: bool,
+               post_resample_rate: float | None, npad, precision: str):
+    """Emitter: channel i -> n_bands rows (band, cf, sd, amp, phase) — the
+    one band-table builder, shared by the row map (wavelet_op) and the
+    group map (car_wavelet_arrow).
+
+    Per channel: K.wavelet_transform once (its forward FFT shared across
+    the bands — the Spark placement of the reference's per-channel cache,
+    wavelet_transform.py:198-207), then |.| and the optional
+    post-resample of each band (wavelet_transform.py:403-409). `phase`
+    is np.angle as list<double> when abs_only=False, else a null column.
+    Phase + resample is rejected as in the reference
+    (wavelet_transform.py:423-424). The argument checks run here, on the
+    driver at plan time — raising from inside the kernel would launch and
+    compute the whole distributed job first."""
+    if not abs_only and post_resample_rate is not None:
+        raise ValueError("Wavelet phase should not be resampled.")
+    import pyarrow as pa
+
+    from ..dsp.filterbank import band_params, check_nyquist
+
+    cfs, sds = band_params(filters, hg_only)
+    check_nyquist(np.asarray(cfs), rate)
+    cfs = np.asarray(cfs, dtype=np.float64)
+    sds = np.asarray(sds, dtype=np.float64)
+    n_bands = len(cfs)
+    names = [*KEYS, "band", "cf", "sd", "amp", "phase"]
+
+    def emit(keys, xs):
+        amps, phases = [], []
+        for x in xs:
+            Xh, _, _, _ = K.wavelet_transform(
+                x[:, np.newaxis], rate, filters=filters, hg_only=hg_only,
+                npad=npad, precision=precision)
+            for b in range(n_bands):
+                amp = np.abs(Xh[:, 0, b])
+                if post_resample_rate is not None:
+                    amp = K.resample(amp, post_resample_rate, rate,
+                                     precision=precision)
+                amps.append(np.ascontiguousarray(amp, dtype=np.float64))
+                if not abs_only:
+                    phases.append(np.angle(Xh[:, 0, b]).astype(np.float64))
+        rows = np.repeat(np.arange(len(xs)), n_bands)
+        bands = np.tile(np.arange(n_bands, dtype=np.int32), len(xs))
+        # a long series x many bands can pass the int32 offset ceiling even
+        # when every array fits; amp and phase rows have equal lengths
+        for lo, hi in _bounded_row_groups(amps):
+            k, b = keys.take(rows[lo:hi]), bands[lo:hi]
+            yield pa.RecordBatch.from_arrays(
+                [k.column(0), k.column(1), pa.array(b), pa.array(cfs[b]),
+                 pa.array(sds[b]), _pack_list_array(amps[lo:hi]),
+                 pa.nulls(hi - lo, type=pa.list_(pa.float64())) if abs_only
+                 else _pack_list_array(phases[lo:hi])],
+                names)
+
+    return emit
+
+
+def _map_values_arrow(df: DataFrame, emit,
+                      schema: str = PACKED_SCHEMA) -> DataFrame:
+    """The row map: each packed row's array goes to `emit` as a float64
+    view of the batch's flat buffer (no per-row copy on the way in)."""
 
     def run(batches):
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             flat, bounds = _list_col_to_numpy(batch.column(2))
-            outs = [np.ascontiguousarray(
-                        np.asarray(fn(flat[bounds[i]:bounds[i + 1]]),
-                                   dtype=np.float64))
-                    for i in range(batch.num_rows)]
-            # bounded groups: an upsampling fn can grow a batch's flattened
-            # output past the int32 list-offset ceiling
-            for lo, hi in _bounded_row_groups(outs):
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0).slice(lo, hi - lo),
-                     batch.column(1).slice(lo, hi - lo),
-                     _pack_list_array(outs[lo:hi])],
-                    ["series_id", "channel", "values"])
+            yield from emit(batch.select(KEYS),
+                            [flat[bounds[i]:bounds[i + 1]]
+                             for i in range(batch.num_rows)])
 
-    return df.select("series_id", "channel", "values").mapInArrow(
-        run, PACKED_SCHEMA)
+    return df.select(*KEYS, "values").mapInArrow(run, schema)
+
+
+def _car_group_map(df: DataFrame, emit, schema: str, mean_frac: float,
+                   precision: str) -> DataFrame:
+    """The per-series group map: one applyInArrow group gathers a series'
+    channels in channel order, K.subtract_car references the
+    (n_time x n_channels) block, and the CAR'd channels go to `emit`.
+
+    Scale bound: one group = one series' block. For recordings past
+    executor memory, use the segmented pipeline (CAR is per-timepoint, so
+    its window form is exact and bounded)."""
+    import pyarrow as pa
+
+    def fn(table):
+        order = np.argsort(table.column("channel").to_numpy(
+            zero_copy_only=False))
+        flat, bounds = _list_col_to_numpy(table.column("values"))
+        X = np.stack([flat[bounds[i]:bounds[i + 1]] for i in order], axis=1)
+        Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
+                                       precision=precision),
+                        dtype=np.float64)
+        keys = table.select(KEYS).combine_chunks().to_batches()[0]
+        return pa.Table.from_batches(list(emit(
+            keys.take(order), [Xc[:, i] for i in range(Xc.shape[1])])))
+
+    return df.groupBy("series_id").applyInArrow(fn, schema)
 
 
 def fused_ops_arrow(df: DataFrame, *fns) -> DataFrame:
-    """Arrow-native twin of fused_ops: chained kernels, one crossing."""
+    """Chain ndarray->ndarray kernels in ONE Python crossing (the Spark
+    analog of the reference's fused notch+CAR stage pipelines.py:114-173 —
+    here used for resample+notch, which are adjacent per-channel stages)."""
 
     def chained(x):
         for f in fns:
             x = f(x)
         return x
 
-    return _map_values_arrow(df, chained)
+    return _map_values_arrow(df, _values_rows(chained))
 
 
-WAVELET_SCHEMA = ("series_id STRING, channel INT, band INT, cf DOUBLE, "
-                  "sd DOUBLE, amp ARRAY<DOUBLE>, phase ARRAY<DOUBLE>")
+def resample_op(df: DataFrame, new_freq: float, old_freq: float,
+                npad="fast", precision: str = "single") -> DataFrame:
+    """FFT rational resample of every channel. Parity: resample.py:105-153."""
+    return fused_ops_arrow(
+        df, lambda x: K.resample(x, new_freq, old_freq, npad=npad,
+                                 precision=precision))
 
 
-def _wavelet_bands(x_col: np.ndarray, rate: float, filters: str,
-                   hg_only: bool, abs_only: bool,
-                   post_resample_rate: float | None, npad, precision: str):
-    """One channel -> (band, amp, phase) tuples: the single spelling of
-    the wavelet / abs / optional post-resample / optional phase sequence
-    shared by wavelet_op, car_wavelet_op and car_wavelet_arrow (which are
-    contractually pinned bitwise-equal — any change here changes all
-    three together instead of inviting drift). `x_col` is (n_time, 1)."""
-    Xh, _, _, _ = K.wavelet_transform(
-        x_col, rate, filters=filters, hg_only=hg_only, npad=npad,
-        precision=precision)
-    for b in range(Xh.shape[-1]):
-        amp = np.abs(Xh[:, 0, b])
-        if post_resample_rate is not None:
-            amp = K.resample(amp, post_resample_rate, rate,
-                             precision=precision)
-        phase = (None if abs_only
-                 else np.angle(Xh[:, 0, b]).astype(np.float64))
-        yield b, amp.astype(np.float64), phase
+def notch_op(df: DataFrame, rate: float, noise_hz: float = 60.0,
+             npad="fast", precision: str = "single") -> DataFrame:
+    """60 Hz + harmonics notch. Parity: linenoise_notch.py:55-92."""
+    return fused_ops_arrow(
+        df, lambda x: K.apply_linenoise_notch(x, rate, noise_hz=noise_hz,
+                                              npad=npad, precision=precision))
 
 
 def wavelet_op(df: DataFrame, rate: float, filters: str = "rat",
                hg_only: bool = True, abs_only: bool = True,
                post_resample_rate: float | None = None, npad="fast",
                precision: str = "single") -> DataFrame:
-    """Morlet wavelet decomposition: one input row (channel) fans out to
-    n_bands output rows carrying amplitude (and optionally phase) arrays.
-
-    The channel's forward FFT (X_fft_h) is computed once and shared across
-    its bands — the Spark placement of the reference's per-channel cache
-    (wavelet_transform.py:198-207). Optional post-resample of amplitudes
-    mirrors store_wavelet_transform (wavelet_transform.py:403-409); phase
-    + resample is rejected as in the reference (wavelet_transform.py:423-424).
-    Parity: wavelet_transform.py:238-322, 325-444.
-    """
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    from ..dsp.filterbank import band_params, check_nyquist
-
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for sid, ch, vals in zip(pdf["series_id"], pdf["channel"],
-                                     pdf["values"]):
-                x = np.asarray(vals, dtype=np.float64)[:, np.newaxis]
-                rows = [(sid, ch, b, cfs_l[b], sds_l[b], amp, phase)
-                        for b, amp, phase in _wavelet_bands(
-                            x, rate, filters, hg_only, abs_only,
-                            post_resample_rate, npad, precision)]
-                yield pd.DataFrame(
-                    rows, columns=["series_id", "channel", "band", "cf",
-                                   "sd", "amp", "phase"])
-
-    return df.mapInPandas(run, WAVELET_SCHEMA)
-
-
-def car_wavelet_op(df: DataFrame, rate: float, mean_frac: float = 0.95,
-                   filters: str = "rat", hg_only: bool = True,
-                   abs_only: bool = True,
-                   post_resample_rate: float | None = None, npad="fast",
-                   precision: str = "single") -> DataFrame:
-    """Fused CAR -> wavelet in ONE Python crossing: the CAR gather already
-    holds a whole series' channel block in one task (the per-series
-    applyInPandas group), and the wavelet is per-channel — a strict subset
-    of that grouping — so running it inside the same kernel saves a full
-    Arrow round-trip of the CAR'd signal (2 x n_time x n_channels doubles)
-    plus one mapInPandas stage. Identical math to subtract_car_packed
-    followed by wavelet_op (same K.* calls in the same order); the
-    unfused pair remains for `all_steps` lineage materialization.
-    Parity: the reference's own fused store_linenoise_notch_CAR stage
-    (pipelines.py:114-173) applied one stage later.
-    """
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    from ..dsp.filterbank import band_params, check_nyquist
-
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["channel"].to_numpy())
-        pdf = pdf.iloc[order]
-        X = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["values"]], axis=1)
-        Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
-                                       precision=precision),
-                        dtype=np.float64)
-        rows = []
-        for i, (sid, ch) in enumerate(zip(pdf["series_id"], pdf["channel"])):
-            rows.extend(
-                (sid, ch, b, cfs_l[b], sds_l[b], amp, phase)
-                for b, amp, phase in _wavelet_bands(
-                    Xc[:, i:i + 1], rate, filters, hg_only, abs_only,
-                    post_resample_rate, npad, precision))
-        return pd.DataFrame(
-            rows, columns=["series_id", "channel", "band", "cf", "sd",
-                           "amp", "phase"])
-
-    return df.groupBy("series_id").applyInPandas(fn, WAVELET_SCHEMA)
+    """Morlet wavelet decomposition on the row map: one input row
+    (channel) fans out to n_bands output rows carrying amplitude (and
+    optionally phase) arrays. Parity: wavelet_transform.py:238-322,
+    325-444."""
+    return _map_values_arrow(
+        df, _band_rows(rate, filters, hg_only, abs_only, post_resample_rate,
+                       npad, precision), WAVELET_SCHEMA)
 
 
 def car_wavelet_arrow(df: DataFrame, rate: float, mean_frac: float = 0.95,
@@ -295,62 +266,15 @@ def car_wavelet_arrow(df: DataFrame, rate: float, mean_frac: float = 0.95,
                       abs_only: bool = True,
                       post_resample_rate: float | None = None, npad="fast",
                       precision: str = "single") -> DataFrame:
-    """Arrow-native twin of car_wavelet_op (applyInArrow): the series'
-    channel block arrives as one flat float64 buffer + offsets and the
-    band amplitudes leave the same way — no pandas object boxing on either
-    side of the heaviest crossing. Same K.* calls in the same order as
-    car_wavelet_op; pinned near-bitwise-equal in tests/test_spark_operators.py."""
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    if not abs_only:
-        # rejected EAGERLY at the driver — raising from inside the executor
-        # kernel would launch and compute the whole distributed job first
-        raise NotImplementedError(
-            "car_wavelet_arrow: phase output is kept on the pandas path; "
-            "use car_wavelet_op(abs_only=False)")
-    import pyarrow as pa
-
-    from ..dsp.filterbank import band_params, check_nyquist
-
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
-    n_bands = len(cfs_l)
-
-    def fn(table: "pa.Table") -> "pa.Table":
-        ch = table.column("channel").to_numpy(zero_copy_only=False)
-        order = np.argsort(ch)
-        flat, bounds = _list_col_to_numpy(table.column("values"))
-        X = np.stack([flat[bounds[i]:bounds[i + 1]] for i in order], axis=1)
-        sid = table.column("series_id")[0].as_py()
-        Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
-                                       precision=precision),
-                        dtype=np.float64)
-        amps, out_ch = [], []
-        for i, p in enumerate(order):
-            for _b, amp, _phase in _wavelet_bands(
-                    Xc[:, i:i + 1], rate, filters, hg_only, True,
-                    post_resample_rate, npad, precision):
-                amps.append(np.ascontiguousarray(amp))
-                out_ch.append(int(ch[p]))
-        bands_flat = [b for _ in order for b in range(n_bands)]
-        # chunked table: each chunk's flattened amp length stays under the
-        # int32 list-offset ceiling (a long series x many bands can exceed
-        # it in one group even when every array is individually fine)
-        chunks = []
-        for lo, hi in _bounded_row_groups(amps):
-            n = hi - lo
-            chunks.append(pa.table({
-                "series_id": pa.array([sid] * n, type=pa.string()),
-                "channel": pa.array(out_ch[lo:hi], type=pa.int32()),
-                "band": pa.array(bands_flat[lo:hi], type=pa.int32()),
-                "cf": pa.array([cfs_l[b] for b in bands_flat[lo:hi]],
-                               type=pa.float64()),
-                "sd": pa.array([sds_l[b] for b in bands_flat[lo:hi]],
-                               type=pa.float64()),
-                "amp": _pack_list_array(amps[lo:hi]),
-                "phase": pa.nulls(n, type=pa.list_(pa.float64())),
-            }))
-        return pa.concat_tables(chunks)
-
-    return df.groupBy("series_id").applyInArrow(fn, WAVELET_SCHEMA)
+    """Fused CAR -> wavelet in ONE Python crossing: the CAR gather already
+    holds a whole series' channel block in one task, and the wavelet is
+    per-channel — a strict subset of that grouping — so running it inside
+    the same group map saves a full round-trip of the CAR'd signal
+    (2 x n_time x n_channels doubles) plus one row-map stage. Same K.*
+    calls in the same order as subtract_car_packed followed by wavelet_op;
+    the unfused pair remains for `all_steps` lineage materialization.
+    Parity: the reference's own fused store_linenoise_notch_CAR stage
+    (pipelines.py:114-173) applied one stage later."""
+    return _car_group_map(
+        df, _band_rows(rate, filters, hg_only, abs_only, post_resample_rate,
+                       npad, precision), WAVELET_SCHEMA, mean_frac, precision)

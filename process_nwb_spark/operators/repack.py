@@ -5,17 +5,20 @@ Packed (kernel carrier):      (series_id, channel, values ARRAY<DOUBLE>)
 
 Every spectral kernel needs a channel's full time axis in one task, so the
 engine packs once per kernel *stage group* (one shuffle), runs any number of
-fused kernels on the packed rows via narrow `mapInPandas` passes, and
+fused kernels on the packed rows via narrow `mapInArrow` passes, and
 unpacks with `posexplode` (narrow). This keeps the default pipeline at 3
 repacking shuffles total (SURVEY.md §3/§7).
 
 Packing is pure Catalyst: collect_list of (sample_idx, value) structs +
-array_sort + transform — no Python crossing, stays in the JVM.
+array_sort + transform — no Python crossing, stays in the JVM. A NULL
+sample packs as NaN at its own index, as in the relational CAR.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .car import _nan_safe_value
 
 KEYS = ("series_id", "channel")
 
@@ -25,7 +28,7 @@ def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
 
     Time order comes from an explicit repartition on the group keys +
     sortWithinPartitions on (keys, sample_idx), so in the common case
-    collect_list of the bare value column arrives already ordered. That
+    collect_list of the value column arrives already ordered. That
     arrival order is NOT an API contract, though: ObjectHashAggregate
     falls back to sort-based aggregation past
     spark.sql.objectHashAggregate.sortBased.fallbackThreshold (default 128
@@ -55,7 +58,9 @@ def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
         df.repartition(*KEYS)
         .sortWithinPartitions(*KEYS, "sample_idx")
         .groupBy(*KEYS)
-        .agg(F.collect_list(value_col).alias("_v"),
+        # NULL -> NaN: collect_list skips a NULL value but would keep its
+        # sample_idx, shifting every later sample one index earlier
+        .agg(F.collect_list(_nan_safe_value(value_col)).alias("_v"),
              F.collect_list("sample_idx").alias("_i"))
     )
     n = F.size("_i")

@@ -227,36 +227,25 @@ def segmented_band_kernel(signals: DataFrame,
                           fn: Callable[[np.ndarray], np.ndarray],
                           seg_len: int, overlap: int,
                           ratio: float | Fraction = 1.0,
-                          key_aware: bool = False,
                           meta_cols: tuple[str, ...] = ()) -> DataFrame:
     """Fan-out variant of `segmented_kernel`: `fn` maps a 1-D segment to a
     2-D (n_out, n_bands) block (e.g. wavelet amplitudes); output is long
     over (band, sample_idx). Same bounded-group/one-shuffle layout, same
     shared segment-assignment and core-trim machinery.
 
-    `key_aware=True` calls `fn(x, series_id)` instead of `fn(x)` — for
-    kernels whose constants are per-series (e.g. dense-grid wavelet
-    normalization, which depends on the series' total length).
-
     `meta_cols` names extra per-series-constant columns on `signals`
     (e.g. a broadcast-joined catalog length) that ride through the
     segment shuffle; `fn` is then called `fn(x, meta)` with the group's
     first-row values as a dict. This keeps per-series constants in the
     PLAN (a broadcast join) instead of a driver-collected dict in the
-    kernel closure — the closure stays O(1) at millions of series.
-    Mutually exclusive with `key_aware`."""
-    if key_aware and meta_cols:
-        raise ValueError("key_aware and meta_cols are mutually exclusive")
+    kernel closure — the closure stays O(1) at millions of series."""
     L, V = int(seg_len), int(overlap)
     r = _as_fraction(ratio)
     _validate(L, V, r, 1)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         seg_fn = fn
-        if key_aware:
-            sid0 = pdf["series_id"].iloc[0]
-            seg_fn = lambda x: fn(x, sid0)  # noqa: E731
-        elif meta_cols:
+        if meta_cols:
             meta = {c: pdf[c].iloc[0] for c in meta_cols}
             seg_fn = lambda x: fn(x, meta)  # noqa: E731
         (sid, ch), g0, kept = _segment_output(pdf, seg_fn, L, V, r)

@@ -19,8 +19,10 @@ Physical plan (2 shuffles on the packed layout — SURVEY.md §3, improved):
   packed CAR (shuffle 2: n_channels array rows per series — NOT the long
   rows; the relational window CAR would shuffle n_time*n_channels rows) ->
   wavelet kernel (narrow, fans out to bands) -> unpack -> relational tail.
-With `fuse=False` the original 3-shuffle relational-CAR plan runs instead
-(it materializes the long intermediates the `all_steps` catalog needs).
+Both kernel crossings are Arrow-native (operators/kernel_ops.py). With
+`fuse=False` the original 3-shuffle relational-CAR plan runs instead (it
+materializes the long intermediates the `all_steps` catalog needs) on the
+same Arrow row map.
 """
 from __future__ import annotations
 
@@ -31,9 +33,9 @@ from pyspark.sql import functions as F
 
 from .dsp import kernels as K
 from .operators.car import subtract_car, subtract_car_packed
-from .operators.kernel_ops import (car_wavelet_arrow, car_wavelet_op,
-                                   fused_ops, fused_ops_arrow, notch_op,
-                                   resample_op, scale_packed, wavelet_op)
+from .operators.kernel_ops import (car_wavelet_arrow, fused_ops_arrow,
+                                   notch_op, resample_op, scale_packed,
+                                   wavelet_op)
 from .operators.repack import pack, unpack
 from .operators.zscore import band_mean, high_gamma_packed, zscore_baseline
 
@@ -61,27 +63,18 @@ def preprocess(signals: DataFrame, rate: float,
                filters: str = "rat", hg_only: bool = True,
                mean_frac: float = 0.95, scaling: float = SCALING,
                abs_only: bool = True, precision: str = "single",
-               fuse: bool = True, arrow: bool = True,
+               fuse: bool = True,
                segmented: bool = False, seg_len: int | None = None,
                seg_overlap: int = 4096) -> PreprocessResult:
     """The default pipeline on a long signals DataFrame
     (series_id, channel, sample_idx, value). Parity: pipelines.py:15-111.
 
-    `arrow=True` (default) runs the two kernel crossings — resample+notch
-    and CAR->wavelet — through the Arrow-native operators (mapInArrow /
-    applyInArrow): same math, same plan shape, but signal arrays cross as
-    flat float64 buffers + offsets instead of pandas object Series of
-    boxed per-row ndarrays, in both directions. Measured (8 series x 32 ch
-    x 10 s @ 3.2 kHz, interleaved min-of-5): 2.55 s pandas -> 2.11 s
-    arrow, bringing the pipeline to 1.34x the serial single-core NumPy
-    replay of the same workload. (An Arrow-native pack was also tried and
-    measured STRICTLY worse — 2.6 s vs 0.8 s for the JVM collect_list
-    pack — because it pays a full extra Python round-trip of the packed
-    arrays; the JVM pack stays regardless of `arrow`.) `arrow=False`
-    keeps the pandas operators — both paths are pinned near-bitwise-equal
-    (1e-12 at double; the FFT itself has 1-2 ULP run-to-run alignment
-    jitter, so exact bitwise across executions is unattainable) in
-    tests/test_spark_operators.py.
+    The two kernel crossings — resample+notch and CAR->wavelet — run
+    through the Arrow operators (mapInArrow / applyInArrow): signal arrays
+    cross as flat float64 buffers + offsets in both directions. (An
+    Arrow-native pack was also tried and measured STRICTLY worse — 2.6 s
+    vs 0.8 s for the JVM collect_list pack — because it pays a full extra
+    Python round-trip of the packed arrays.)
 
     `segmented=True` (or any explicit `seg_len`) routes the whole pipeline
     through the overlap-segmented operators (operators/segmented.py): no
@@ -108,8 +101,6 @@ def preprocess(signals: DataFrame, rate: float,
                 "segmented preprocess does not materialize the unfused "
                 "(fuse=False) lineage stages; run fuse=True, or run the "
                 "whole-channel path for --all_steps-style lineage")
-        # `arrow` is irrelevant here (the segment kernels are
-        # applyInPandas-grouped); accepted and ignored by design
         return _preprocess_segmented(
             signals, rate, initial_resample_rate, final_resample_rate,
             filters=filters, hg_only=hg_only, mean_frac=mean_frac,
@@ -117,12 +108,10 @@ def preprocess(signals: DataFrame, rate: float,
             seg_overlap=seg_overlap)
     stages: dict[str, DataFrame] = {}
 
-    use_arrow = arrow and fuse and abs_only
     packed = pack(signals)
     packed = scale_packed(packed, scaling)
     if fuse:
-        kernel_map = fused_ops_arrow if use_arrow else fused_ops
-        ds = kernel_map(
+        ds = fused_ops_arrow(
             packed,
             lambda x: K.resample(x, initial_resample_rate, rate,
                                  precision=precision),
@@ -136,12 +125,11 @@ def preprocess(signals: DataFrame, rate: float,
         repacked = subtract_car_packed(ds, mean_frac=mean_frac,
                                        precision=precision)
         stages["CAR_ln_downsampled"] = unpack(repacked)
-        car_wavelet = car_wavelet_arrow if use_arrow else car_wavelet_op
-        wv = car_wavelet(ds, initial_resample_rate, mean_frac=mean_frac,
-                         filters=filters, hg_only=hg_only,
-                         abs_only=abs_only,
-                         post_resample_rate=final_resample_rate,
-                         precision=precision)
+        wv = car_wavelet_arrow(ds, initial_resample_rate,
+                               mean_frac=mean_frac, filters=filters,
+                               hg_only=hg_only, abs_only=abs_only,
+                               post_resample_rate=final_resample_rate,
+                               precision=precision)
     else:
         ds = resample_op(packed, initial_resample_rate, rate,
                          precision=precision)

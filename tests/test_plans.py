@@ -74,6 +74,27 @@ def test_pipeline_two_shuffles(spark):
     assert count_exchanges(res.tf) == 2, formatted_plan(res.tf, "simple")
 
 
+@pytest.mark.parametrize("kw", [
+    {}, {"abs_only": False, "final_resample_rate": None}, {"fuse": False}],
+    ids=["default", "phase", "unfused"])
+def test_pipeline_crosses_by_arrow_only(spark, kw):
+    """Every preprocess plan (output, packed output and each lineage
+    stage) crosses into Python by the Arrow maps only; the fused plans
+    keep exactly 2 shuffles."""
+    from process_nwb_spark import preprocess
+    from process_nwb_spark.synth import generate_synthetic_data, to_long_df
+
+    X = generate_synthetic_data(1.0, 4, 1000.0, seed=0)
+    res = preprocess(to_long_df(spark, X), 1000.0, 500.0,
+                     **{"final_resample_rate": 250.0, **kw})
+    for df in (res.tf, res.tf_packed, *res.stages.values()):
+        plan = formatted_plan(df, "simple")
+        assert "MapInPandas" not in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+    if kw.get("fuse", True):
+        assert count_exchanges(res.tf) == 2, formatted_plan(res.tf, "simple")
+
+
 def test_stft_is_one_shuffle(spark):
     """The STFT plan: narrow frame-explode -> ONE shuffle on
     (series, channel, frame) -> per-frame kernel. No whole-channel state,

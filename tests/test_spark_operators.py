@@ -4,7 +4,8 @@ import numpy as np
 import pytest
 
 from process_nwb_spark.dsp import kernels as K
-from process_nwb_spark.operators.car import car_df, subtract_car
+from process_nwb_spark.operators.car import (car_df, subtract_car,
+                                             subtract_car_packed)
 from process_nwb_spark.operators.kernel_ops import (notch_op, resample_op,
                                                     scale_packed, wavelet_op)
 from process_nwb_spark.operators.repack import pack, unpack
@@ -82,6 +83,9 @@ def test_notch_op_matches_kernel(spark, signals, dense):
 def test_subtract_car_matches_kernel(spark, signals, dense):
     got = long_to_dense(subtract_car(signals, mean_frac=0.95))
     want = K.subtract_car(dense, 0.95, precision="double")
+    np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
+    got = long_to_dense(unpack(subtract_car_packed(pack(signals), 0.95,
+                                                   precision="double")))
     np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
 
 
@@ -167,93 +171,88 @@ def test_electrodes_df(spark):
     assert (pdf.location == "cortex").all()
 
 
-def _rows_map(df, key_cols, val_col):
-    return {tuple(r[k] for k in key_cols): np.asarray(r[val_col])
-            for r in df.collect()}
+def test_bounded_row_groups_split_under_cap():
+    """The int32-offset guard of the Arrow emitters, Spark-free: rows split
+    into groups whose flattened length stays under `cap`, a row longer
+    than the cap gets its own group, and no input yields no group."""
+    from process_nwb_spark.operators.kernel_ops import _bounded_row_groups
+
+    arrs = [np.zeros(n) for n in (3, 4, 2, 9, 1, 1)]
+    groups = list(_bounded_row_groups(arrs, cap=8))
+    assert groups == [(0, 2), (2, 3), (3, 4), (4, 6)]
+    assert list(_bounded_row_groups([], cap=8)) == []
 
 
-def _assert_rows_close(a, b, rtol=1e-12, atol=1e-13):
-    """Near-bitwise: the two sides run the IDENTICAL kernel code, but
-    pocketfft's SIMD path selection depends on heap-buffer alignment,
-    which varies between independent executions — measured 1-2 ULP
-    differences on a few hundred values per run, at double precision too.
-    1e-12 is ~4 orders above that jitter and ~12 below any semantic
-    difference."""
-    assert a.keys() == b.keys()
-    for k in a:
-        np.testing.assert_allclose(a[k], b[k], rtol=rtol, atol=atol,
-                                   err_msg=str(k))
+def test_pack_null_sample_keeps_its_index(spark):
+    """A NULL sample packs as NaN at its own index; collect_list alone
+    would drop it and shift every later sample one index earlier."""
+    df = spark.createDataFrame(
+        [("s", 0, i, None if i == 2 else float(i)) for i in range(6)],
+        "series_id STRING, channel INT, sample_idx BIGINT, value DOUBLE")
+    vals = np.asarray(pack(df).first()["values"], dtype=np.float64)
+    np.testing.assert_array_equal(vals, [0.0, 1.0, np.nan, 3.0, 4.0, 5.0])
 
 
-def test_fused_ops_arrow_bitwise(spark, signals):
-    """Arrow crossing == pandas crossing, near-bitwise, for the fused
-    resample+notch kernel map (same fn over the same float64 views)."""
-    from process_nwb_spark.operators.kernel_ops import (fused_ops,
-                                                        fused_ops_arrow)
-
-    pk = scale_packed(pack(signals), 1e6)
-    # precision="double": the float32 FFT is only 1-ULP repeatable across
-    # independent executions (alignment-dependent SIMD rounding), so the
-    # bitwise crossing-equivalence claim is made at double
-    fns = (lambda x: K.resample(x, 500.0, RATE, precision="double"),
-           lambda x: K.apply_linenoise_notch(x, 500.0, precision="double"))
-    a = _rows_map(fused_ops(pk, *fns), ("series_id", "channel"), "values")
-    b = _rows_map(fused_ops_arrow(pk, *fns), ("series_id", "channel"),
-                  "values")
-    _assert_rows_close(a, b)
+def _car_wavelet_dense(dense):
+    """Dense replay of car_wavelet_arrow's K.subtract_car ->
+    K.wavelet_transform, on the scaled signal."""
+    Xc = K.subtract_car(dense * 1e6, 0.95, precision="double")
+    Xh, _, cfs, sds = K.wavelet_transform(Xc, RATE, "rat", True,
+                                          precision="double")
+    return Xh, cfs, sds
 
 
-def test_car_wavelet_arrow_bitwise(spark, signals):
-    """applyInArrow CAR->wavelet == applyInPandas twin, near-bitwise, incl.
-    the post-resample of band amplitudes and the null phase column."""
-    from process_nwb_spark.operators.kernel_ops import (car_wavelet_arrow,
-                                                        car_wavelet_op)
+def test_fused_ops_arrow_matches_kernel(spark, signals, dense):
+    """The fused resample+notch row map == K.resample -> K.apply_linenoise_notch."""
+    from process_nwb_spark.operators.kernel_ops import fused_ops_arrow
 
-    pk = scale_packed(pack(signals), 1e6)
-    kw = dict(mean_frac=0.95, filters="rat", hg_only=True, abs_only=True,
-              post_resample_rate=250.0, precision="double")
-    keys = ("series_id", "channel", "band")
-    a = _rows_map(car_wavelet_op(pk, RATE, **kw), keys, "amp")
-    b = _rows_map(car_wavelet_arrow(pk, RATE, **kw), keys, "amp")
-    _assert_rows_close(a, b)
-    cfs = {tuple(r[k] for k in keys): (r["cf"], r["sd"], r["phase"])
-           for r in car_wavelet_arrow(pk, RATE, **kw).collect()}
-    for _, (cf, sd, phase) in cfs.items():
-        assert cf > 0 and sd > 0 and phase is None
+    ds = fused_ops_arrow(
+        scale_packed(pack(signals), 1e6),
+        lambda x: K.resample(x, 500.0, RATE, precision="double"),
+        lambda x: K.apply_linenoise_notch(x, 500.0, precision="double"))
+    got = long_to_dense(unpack(ds))
+    want = K.apply_linenoise_notch(
+        K.resample(dense * 1e6, 500.0, RATE, precision="double"), 500.0,
+        precision="double")
+    np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-9)
 
 
-def test_preprocess_arrow_matches_pandas_bitwise(spark, dense):
-    """End-to-end: preprocess(arrow=True) == preprocess(arrow=False),
-    near-bitwise (1e-12 at double, 1e-5 at single).
+def test_car_wavelet_arrow_matches_kernel(spark, signals, dense):
+    """The CAR->wavelet group map (amplitude, post-resampled) == the dense
+    K.subtract_car -> K.wavelet_transform -> |.| -> K.resample replay,
+    with cf/sd per band and a null phase column."""
+    from process_nwb_spark.operators.kernel_ops import car_wavelet_arrow
 
-    No two independent executions — pandas vs pandas included — can
-    promise exact bitwise equality: pocketfft's SIMD kernel choice
-    depends on heap-buffer alignment, which varies run-to-run, giving
-    1-2 ULP jitter (2^-7 absolute on O(1e3) float32 values; a few
-    hundred 1-ULP float64 values per run at double). The band fold in
-    high_gamma_packed is sorted by band, so summation order is pinned
-    and contributes no extra noise."""
-    from process_nwb_spark import high_gamma_trace, preprocess
+    wv = car_wavelet_arrow(scale_packed(pack(signals), 1e6), RATE,
+                           mean_frac=0.95, filters="rat", hg_only=True,
+                           abs_only=True, post_resample_rate=250.0,
+                           precision="double")
+    Xh, cfs, sds = _car_wavelet_dense(dense)
+    rows = wv.collect()
+    assert len(rows) == Xh.shape[1] * Xh.shape[2]
+    for r in rows:
+        want = K.resample(np.abs(Xh[:, r.channel, r.band]), 250.0, RATE,
+                          precision="double")
+        np.testing.assert_allclose(np.asarray(r.amp), want, rtol=1e-9,
+                                   atol=1e-9)
+        assert r.cf == pytest.approx(cfs[r.band])
+        assert r.sd == pytest.approx(sds[r.band])
+        assert r.phase is None
 
-    df = to_long_df(spark, dense)
 
-    def run(arrow, precision):
-        res = preprocess(df, RATE, initial_resample_rate=500.0,
-                         final_resample_rate=250.0, filters="rat",
-                         hg_only=True, arrow=arrow, precision=precision)
-        hg = high_gamma_trace(res, 0.25, 250.0)
-        vcol = [c for c in hg.columns
-                if c not in ("series_id", "channel", "sample_idx")][0]
-        return {(r["series_id"], r["channel"], r["sample_idx"]): r[vcol]
-                for r in hg.collect()}
+def test_car_wavelet_arrow_phase_matches_kernel(spark, signals, dense):
+    """abs_only=False: the group map emits phase == np.angle of the dense
+    replay, beside the unresampled amplitude."""
+    from process_nwb_spark.operators.kernel_ops import car_wavelet_arrow
 
-    a, b = run(True, "double"), run(False, "double")
-    assert a.keys() == b.keys()
-    av = np.array([a[k] for k in sorted(a)])
-    bv = np.array([b[k] for k in sorted(a)])
-    np.testing.assert_allclose(av, bv, rtol=1e-12, atol=1e-13)
-
-    a, b = run(True, "single"), run(False, "single")
-    av = np.array([a[k] for k in sorted(a)])
-    bv = np.array([b[k] for k in sorted(a)])
-    np.testing.assert_allclose(av, bv, rtol=1e-5, atol=1e-6)
+    wv = car_wavelet_arrow(scale_packed(pack(signals), 1e6), RATE,
+                           abs_only=False, precision="double")
+    Xh, _, _ = _car_wavelet_dense(dense)
+    rows = wv.collect()
+    assert len(rows) == Xh.shape[1] * Xh.shape[2]
+    for r in rows:
+        want = Xh[:, r.channel, r.band]
+        np.testing.assert_allclose(np.asarray(r.phase), np.angle(want),
+                                   rtol=1e-9, atol=1e-9)
+        np.testing.assert_allclose(np.asarray(r.amp), np.abs(want),
+                                   rtol=1e-9, atol=1e-9)
