@@ -589,8 +589,6 @@ def bench_cores_scaling(spark, registry, sf_dir: str):
     Returns the stopped-session state: the caller's next section (the
     curve) launches its own child JVM and the stale parent handle's
     stop() is a no-op, so no session leaks past this section."""
-    import statistics
-
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cpus_full = int(cpus_env) if str(cpus_env).isdigit() else 32
     cores_low = int(os.environ.get("SPARK_GRAFT_BENCH_CORES_LOW", "8"))
@@ -606,7 +604,7 @@ def bench_cores_scaling(spark, registry, sf_dir: str):
     from process_nwb_spark.relational.core import T, clear_persist_slots
     from process_nwb_spark.session import get_spark
 
-    def _one_count(n: int) -> dict:
+    def _one_count(n: int) -> dict[str, list[float]]:
         s = get_spark(f"bench-cores-{n}", master=f"local[{n}]",
                       shuffle_partitions=n, **{
                           "spark.driver.extraJavaOptions": "-Xlog:disable"})
@@ -626,9 +624,7 @@ def bench_cores_scaling(spark, registry, sf_dir: str):
                 samples["assemble_v3"].append(
                     _timed_noop(assemble_v3(T(s, dest, "documents"))))
                 clear_persist_slots()
-            return {f: {"min": round(min(v), 3),
-                        "median": round(statistics.median(v), 3)}
-                    for f, v in samples.items()}
+            return samples
         finally:
             try:
                 s.stop()
@@ -644,15 +640,30 @@ def bench_cores_scaling(spark, registry, sf_dir: str):
         pass
     full_times = _one_count(cpus_full)
     low_times = _one_count(cores_low)
-    out = {}
-    for f, ft in full_times.items():
-        lt = low_times[f]
-        out[f] = {"full": ft, "low": lt,
-                  "ratio_min": round(lt["min"] / ft["min"], 2),
-                  "ratio_median": round(lt["median"] / ft["median"], 2)}
     return {"cpus_full": cpus_full, "cores_low": cores_low,
             "n_passes": passes, "sf": "sf1 (10x scale-up)",
-            "queries": out}
+            "queries": {f: _scaling_entry(v, low_times[f])
+                        for f, v in full_times.items()}}
+
+
+def _scaling_entry(full: list[float], low: list[float]) -> dict:
+    """One face's cores-scaling record from its raw samples (seconds).
+    The ratios divide the UNROUNDED statistics — a sub-millisecond
+    minimum rounds to 0.0 — and are rounded only for display; a
+    non-positive denominator yields None instead of voiding the section."""
+    import statistics
+
+    def ratio(num: float, den: float) -> float | None:
+        return round(num / den, 2) if den > 0 else None
+
+    def shown(v: list[float]) -> dict:
+        return {"min": round(min(v), 3),
+                "median": round(statistics.median(v), 3)}
+
+    return {"full": shown(full), "low": shown(low),
+            "ratio_min": ratio(min(low), min(full)),
+            "ratio_median": ratio(statistics.median(low),
+                                  statistics.median(full))}
 
 
 # once-only per-point injection state for the retry-path tests

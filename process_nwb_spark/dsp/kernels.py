@@ -241,3 +241,18 @@ def subtract_car(X: np.ndarray, mean_frac: float = 0.95, round_func=np.ceil,
     X = X.astype(cast_dtype(X, precision), copy=False)
     return X - car(X, mean_frac=mean_frac, round_func=round_func,
                    precision=precision)
+
+
+def high_gamma(amps: np.ndarray, n_baseline: int) -> np.ndarray:
+    """The tutorial's tail on one channel: (n_bands, n_time) band
+    amplitudes, rows in band order -> the (n_time,) high-gamma trace.
+    Each band is z-scored against its first `n_baseline` samples
+    (population std, ddof=0; a trace shorter than the window uses its
+    real length), then the bands are averaged, summed in row order.
+    Always float64.
+    Parity: examples/plot_ECoG_preprocessing_tutorial.py:164-167."""
+    amps = np.asarray(amps, dtype=np.float64)
+    base = amps[:, :n_baseline]
+    mu = base.mean(axis=1, keepdims=True)
+    sd = base.std(axis=1, keepdims=True)
+    return ((amps - mu) / sd).mean(axis=0)

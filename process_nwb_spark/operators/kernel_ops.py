@@ -10,7 +10,8 @@ an ARRAY<DOUBLE>) and cross into Python through Arrow only, by two maps:
   series' channels for the CAR, optionally followed by the wavelet.
 
 Both hand channel arrays to an emitter: `_values_rows` (one packed row per
-channel) or `_band_rows` (the band table, one row per channel x band).
+channel), `_band_rows` (the band table, one row per channel x band) or
+`_high_gamma_rows` (one packed high-gamma trace per channel).
 Signal arrays cross as one flat float64 buffer + offsets in both
 directions, never as per-row boxed objects.
 
@@ -118,62 +119,78 @@ def _values_rows(fn):
     return emit
 
 
-def _band_rows(rate: float, filters: str, hg_only: bool, abs_only: bool,
-               post_resample_rate: float | None, npad, precision: str):
-    """Emitter: channel i -> n_bands rows (band, cf, sd, amp, phase) — the
-    one band-table builder, shared by the row map (wavelet_op) and the
-    group map (car_wavelet_arrow).
-
-    Per channel: K.wavelet_transform once (its forward FFT shared across
-    the bands — the Spark placement of the reference's per-channel cache,
-    wavelet_transform.py:198-207), then |.| and the optional
-    post-resample of each band (wavelet_transform.py:403-409). `phase`
-    is np.angle as list<double> when abs_only=False, else a null column.
-    Phase + resample is rejected as in the reference
-    (wavelet_transform.py:423-424). The argument checks run here, on the
-    driver at plan time — raising from inside the kernel would launch and
-    compute the whole distributed job first."""
+def _wavelet_bands(rate: float, filters: str, hg_only: bool, abs_only: bool,
+                   post_resample_rate: float | None, npad, precision: str):
+    """(cfs, sds, bands): bands(x) -> channel x's float64 |wavelet| arrays
+    in band order, post-resampled, and its np.angle arrays unless abs_only.
+    One K.wavelet_transform per channel (wavelet_transform.py:198-207,
+    403-424). The checks run on the driver at plan time, not in a job."""
     if not abs_only and post_resample_rate is not None:
         raise ValueError("Wavelet phase should not be resampled.")
-    import pyarrow as pa
-
     from ..dsp.filterbank import band_params, check_nyquist
 
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs = np.asarray(cfs, dtype=np.float64)
-    sds = np.asarray(sds, dtype=np.float64)
+    cfs, sds = (np.asarray(v, dtype=np.float64)
+                for v in band_params(filters, hg_only))
+    check_nyquist(cfs, rate)
+
+    def bands(x):
+        Xh, _, _, _ = K.wavelet_transform(
+            x[:, np.newaxis], rate, filters=filters, hg_only=hg_only,
+            npad=npad, precision=precision)
+        amps, phases = [], []
+        for b in range(Xh.shape[2]):
+            amp = np.abs(Xh[:, 0, b])
+            if post_resample_rate is not None:
+                amp = K.resample(amp, post_resample_rate, rate,
+                                 precision=precision)
+            amps.append(np.ascontiguousarray(amp, dtype=np.float64))
+            if not abs_only:
+                phases.append(np.angle(Xh[:, 0, b]).astype(np.float64))
+        return amps, phases
+
+    return cfs, sds, bands
+
+
+def _band_rows(rate: float, filters: str, hg_only: bool, abs_only: bool,
+               post_resample_rate: float | None, npad, precision: str):
+    """Emitter: channel i -> n_bands rows (band, cf, sd, amp, phase), for
+    the row map (wavelet_op) and the group map (car_wavelet_arrow).
+    `phase` is a null column when abs_only."""
+    import pyarrow as pa
+
+    cfs, sds, bands = _wavelet_bands(rate, filters, hg_only, abs_only,
+                                     post_resample_rate, npad, precision)
     n_bands = len(cfs)
-    names = [*KEYS, "band", "cf", "sd", "amp", "phase"]
 
     def emit(keys, xs):
         amps, phases = [], []
-        for x in xs:
-            Xh, _, _, _ = K.wavelet_transform(
-                x[:, np.newaxis], rate, filters=filters, hg_only=hg_only,
-                npad=npad, precision=precision)
-            for b in range(n_bands):
-                amp = np.abs(Xh[:, 0, b])
-                if post_resample_rate is not None:
-                    amp = K.resample(amp, post_resample_rate, rate,
-                                     precision=precision)
-                amps.append(np.ascontiguousarray(amp, dtype=np.float64))
-                if not abs_only:
-                    phases.append(np.angle(Xh[:, 0, b]).astype(np.float64))
+        for a, p in map(bands, xs):
+            amps += a
+            phases += p
         rows = np.repeat(np.arange(len(xs)), n_bands)
-        bands = np.tile(np.arange(n_bands, dtype=np.int32), len(xs))
+        b_idx = np.tile(np.arange(n_bands, dtype=np.int32), len(xs))
         # a long series x many bands can pass the int32 offset ceiling even
         # when every array fits; amp and phase rows have equal lengths
         for lo, hi in _bounded_row_groups(amps):
-            k, b = keys.take(rows[lo:hi]), bands[lo:hi]
+            k, b = keys.take(rows[lo:hi]), b_idx[lo:hi]
             yield pa.RecordBatch.from_arrays(
                 [k.column(0), k.column(1), pa.array(b), pa.array(cfs[b]),
                  pa.array(sds[b]), _pack_list_array(amps[lo:hi]),
                  pa.nulls(hi - lo, type=pa.list_(pa.float64())) if abs_only
                  else _pack_list_array(phases[lo:hi])],
-                names)
+                [*KEYS, "band", "cf", "sd", "amp", "phase"])
 
     return emit
+
+
+def _high_gamma_rows(n_baseline: int, rate: float, filters: str,
+                     hg_only: bool, post_resample_rate, npad, precision: str):
+    """Emitter: channel i -> one packed row, K.high_gamma of _band_rows'
+    own amplitudes — n_bands x fewer arrays back than the band table."""
+    _, _, bands = _wavelet_bands(rate, filters, hg_only, True,
+                                 post_resample_rate, npad, precision)
+    return _values_rows(
+        lambda x: K.high_gamma(np.stack(bands(x)[0]), n_baseline))
 
 
 def _map_values_arrow(df: DataFrame, emit,
@@ -266,15 +283,26 @@ def car_wavelet_arrow(df: DataFrame, rate: float, mean_frac: float = 0.95,
                       abs_only: bool = True,
                       post_resample_rate: float | None = None, npad="fast",
                       precision: str = "single") -> DataFrame:
-    """Fused CAR -> wavelet in ONE Python crossing: the CAR gather already
-    holds a whole series' channel block in one task, and the wavelet is
-    per-channel — a strict subset of that grouping — so running it inside
-    the same group map saves a full round-trip of the CAR'd signal
-    (2 x n_time x n_channels doubles) plus one row-map stage. Same K.*
-    calls in the same order as subtract_car_packed followed by wavelet_op;
-    the unfused pair remains for `all_steps` lineage materialization.
-    Parity: the reference's own fused store_linenoise_notch_CAR stage
+    """Fused CAR -> wavelet in ONE Python crossing: the wavelet is
+    per-channel, a subset of the CAR's per-series group, so running it in
+    the same group map saves a round-trip of the CAR'd signal and a
+    row-map stage. Same K.* calls as subtract_car_packed + wavelet_op.
+    Parity: the reference's fused store_linenoise_notch_CAR stage
     (pipelines.py:114-173) applied one stage later."""
     return _car_group_map(
         df, _band_rows(rate, filters, hg_only, abs_only, post_resample_rate,
                        npad, precision), WAVELET_SCHEMA, mean_frac, precision)
+
+
+def car_high_gamma_arrow(df: DataFrame, rate: float, n_baseline: int,
+                         mean_frac: float = 0.95, filters: str = "rat",
+                         hg_only: bool = True,
+                         post_resample_rate: float | None = None,
+                         npad="fast", precision: str = "single") -> DataFrame:
+    """car_wavelet_arrow with the tutorial's tail (baseline z-score, band
+    mean) in the same crossing: one packed row per channel, no shuffle or
+    JVM array lambda of its own."""
+    return _car_group_map(
+        df, _high_gamma_rows(int(n_baseline), rate, filters, hg_only,
+                             post_resample_rate, npad, precision),
+        PACKED_SCHEMA, mean_frac, precision)

@@ -6,8 +6,8 @@ Packed (kernel carrier):      (series_id, channel, values ARRAY<DOUBLE>)
 Every spectral kernel needs a channel's full time axis in one task, so the
 engine packs once per kernel *stage group* (one shuffle), runs any number of
 fused kernels on the packed rows via narrow `mapInArrow` passes, and
-unpacks with `posexplode` (narrow). This keeps the default pipeline at 3
-repacking shuffles total (SURVEY.md §3/§7).
+unpacks with `posexplode` (narrow). The default pipeline packs once; its
+other shuffle is the per-series CAR group (SURVEY.md §3/§7).
 
 Packing is pure Catalyst: collect_list of (sample_idx, value) structs +
 array_sort + transform — no Python crossing, stays in the JVM. A NULL

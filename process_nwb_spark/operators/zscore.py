@@ -1,23 +1,28 @@
-"""Baseline z-score normalization + band averaging — pure Catalyst.
+"""Baseline z-score normalization + band averaging.
 
 The reference tutorial's final stage (SURVEY.md §2A #28;
 examples/plot_ECoG_preprocessing_tutorial.py:164-167): per (channel, band),
 compute mean/std over a baseline window (first `n_baseline` samples),
 normalize the whole trace, then average the bands into one "high gamma"
-trace per channel.
+trace per channel. The default pipeline runs it inside its CAR->wavelet
+group map (kernel_ops.car_high_gamma_arrow); this module holds the forms
+for band rows that exist on their own.
 
-Plan shape: conditional window aggregates over (series, channel, band) —
-ONE pass, one shuffle. The agg+broadcast-join-back formulation would be two
-references to the upstream DataFrame, and since the upstream here is a
-non-reusable kernel chain (pack -> mapInPandas kernels -> wavelet), Spark
-would execute the whole pipeline twice — a silent 2x. (That formulation
-remains the right one when the facts are a re-scannable table; the oracled
-query `sig_zscore_baseline` states it that way in SQL.)
+Long plan shape: conditional window aggregates over (series, channel,
+band) — ONE pass, one shuffle. An agg+broadcast-join-back would reference
+the non-reusable kernel chain upstream twice, so Spark would execute the
+whole pipeline twice — a silent 2x. (It remains the right form when the
+facts are a re-scannable table; `sig_zscore_baseline` states it that way.)
 """
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..dsp import kernels as K
+from .kernel_ops import PACKED_SCHEMA, _list_col_to_numpy, _pack_list_array
+from .repack import KEYS, unpack
 
 
 def zscore_baseline(tf: DataFrame, n_baseline: int,
@@ -45,56 +50,22 @@ def band_mean(tf: DataFrame, value_col: str = "amp") -> DataFrame:
 
 def high_gamma_packed(wv: DataFrame, n_baseline: int,
                       values_col: str = "amp") -> DataFrame:
-    """zscore_baseline + band_mean fused on the PACKED wavelet rows
-    (series_id, channel, band, amp ARRAY) — the pipeline's physical fast
-    path: baseline stats and normalization are per-row array folds (pure
-    Catalyst higher-order functions, no Python), the band average is an
-    element-wise zip over the n_bands arrays of a channel (one shuffle of
-    n_channels x n_bands ARRAY rows), and the long explode happens ONCE on
-    the final per-channel trace. The long-format formulation (above) pays
-    the explode first and then shuffles n_time x n_channels x n_bands rows
-    twice (window + groupBy); at 64 ch x 60 s that is 9.2M-row shuffles vs
-    384 array rows here (~24 s -> ~2 s measured). Same math: population
-    std over the first n_baseline samples, mean across bands."""
+    """zscore_baseline + band_mean on PACKED band rows (series_id, channel,
+    band, amp ARRAY), e.g. a fuse=False result: one applyInArrow group per
+    channel runs K.high_gamma, the fused pipeline's own tail, on its bands
+    in band order; the long explode happens once, on the trace."""
     nb = int(n_baseline)
-    base = F.slice(values_col, 1, nb)
-    # divide by the ACTUAL baseline count: a trace shorter than n_baseline
-    # yields a short slice, and dividing by the literal nb would deflate
-    # mean/std — silently diverging from the zscore_baseline long path
-    # (which averages over the real count). least() is nb for every
-    # normal-length trace, so the fast path stays bitwise-identical there.
-    bn = F.least(F.lit(nb), F.size(values_col)).cast("double")
-    mu = F.aggregate(base, F.lit(0.0), lambda a, x: a + x) / bn
-    sd = F.sqrt(F.aggregate(base, F.lit(0.0),
-                            lambda a, x: a + (x - mu) * (x - mu)) / bn)
-    # Bind (mu, sd) ONCE per row via the single-element-transform idiom:
-    # naming them with withColumn and referencing the names inside the
-    # per-element lambda lets CollapseProject inline the baseline FOLDS
-    # into the lambda body — the O(nb) aggregate then re-runs for every
-    # one of the n_time elements (measured 114 s vs 6 s on 64 ch x 6
-    # bands x 24k samples). A lambda variable cannot be inlined through.
-    zarr = F.element_at(
-        F.transform(
-            F.array(F.struct(mu.alias("m"), sd.alias("s"))),
-            lambda st: F.transform(
-                values_col, lambda x: (x - st["m"]) / st["s"])),
-        1)
-    z = wv.withColumn("_z", zarr)
-    # collect (band, z) structs and sort by band before the element-wise
-    # fold: collect_list arrival order is not a contract, and summing the
-    # band arrays in arrival order makes the float result depend on task
-    # scheduling / upstream operator choice (~1e-7 relative). Sorting 6
-    # structs is free and pins the sum order -> deterministic output.
-    per_ch = (z.groupBy("series_id", "channel")
-              .agg(F.array_sort(
-                   F.collect_list(F.struct("band", "_z"))).alias("_bz"))
-              .withColumn("_arrs", F.expr("transform(_bz, s -> s._z)"))
-              .withColumn("_hg", F.expr(
-                  "transform(aggregate(_arrs,"
-                  " array_repeat(cast(0.0 as double), size(_arrs[0])),"
-                  " (acc, a) -> zip_with(acc, a, (p, q) -> p + q)),"
-                  " s -> s / size(_arrs))")))
-    return per_ch.select(
-        "series_id", "channel",
-        F.posexplode("_hg").alias("sample_idx", values_col)
-    ).withColumn("sample_idx", F.col("sample_idx").cast("bigint"))
+
+    def fn(table):
+        # band order pins the sum order; arrival order is not a contract
+        order = np.argsort(table.column("band").to_numpy(
+            zero_copy_only=False), kind="stable")
+        flat, bounds = _list_col_to_numpy(table.column(values_col))
+        hg = K.high_gamma(
+            np.stack([flat[bounds[i]:bounds[i + 1]] for i in order]), nb)
+        return table.select(KEYS).slice(0, 1).append_column(
+            "values", _pack_list_array([hg]))
+
+    per_ch = (wv.select(*KEYS, "band", values_col).groupBy(*KEYS)
+              .applyInArrow(fn, PACKED_SCHEMA))
+    return unpack(per_ch, value_col=values_col)

@@ -18,8 +18,11 @@ Physical plan (2 shuffles on the packed layout — SURVEY.md §3, improved):
   [resample+notch fused kernel, narrow] ->
   packed CAR (shuffle 2: n_channels array rows per series — NOT the long
   rows; the relational window CAR would shuffle n_time*n_channels rows) ->
-  wavelet kernel (narrow, fans out to bands) -> unpack -> relational tail.
-Both kernel crossings are Arrow-native (operators/kernel_ops.py). With
+  wavelet kernel in the same group map (fans out to bands) -> unpack.
+`high_gamma_trace` swaps the band emitter for the high-gamma one (baseline
+z-score + band mean in NumPy, one row per channel) and unpacks that: the
+tutorial's tail adds no shuffle. Both kernel crossings are Arrow-native
+(operators/kernel_ops.py). With
 `fuse=False` the original 3-shuffle relational-CAR plan runs instead (it
 materializes the long intermediates the `all_steps` catalog needs) on the
 same Arrow row map.
@@ -27,15 +30,17 @@ same Arrow row map.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dsp import kernels as K
 from .operators.car import subtract_car, subtract_car_packed
-from .operators.kernel_ops import (car_wavelet_arrow, fused_ops_arrow,
-                                   notch_op, resample_op, scale_packed,
-                                   wavelet_op)
+from .operators.kernel_ops import (car_high_gamma_arrow, car_wavelet_arrow,
+                                   fused_ops_arrow, notch_op, resample_op,
+                                   scale_packed, wavelet_op)
 from .operators.repack import pack, unpack
 from .operators.zscore import band_mean, high_gamma_packed, zscore_baseline
 
@@ -48,6 +53,9 @@ class PreprocessResult:
     tf: DataFrame                       # long (series_id, channel, band, cf, sd, sample_idx, amp)
     stages: dict = field(default_factory=dict)
     tf_packed: DataFrame | None = None  # (series_id, channel, band, cf, sd, amp ARRAY)
+    # n_baseline -> packed high-gamma rows (series_id, channel, values
+    # ARRAY), built from the CAR input; set by the fused pipeline only
+    high_gamma: Callable[[int], DataFrame] | None = None
 
     def materialize(self, spark, base_name: str = "ECoG"):
         """`all_steps` analog: register every stage as a temp view with the
@@ -130,6 +138,11 @@ def preprocess(signals: DataFrame, rate: float,
                                hg_only=hg_only, abs_only=abs_only,
                                post_resample_rate=final_resample_rate,
                                precision=precision)
+        high_gamma = partial(car_high_gamma_arrow, ds, initial_resample_rate,
+                             mean_frac=mean_frac, filters=filters,
+                             hg_only=hg_only,
+                             post_resample_rate=final_resample_rate,
+                             precision=precision)
     else:
         ds = resample_op(packed, initial_resample_rate, rate,
                          precision=precision)
@@ -143,6 +156,7 @@ def preprocess(signals: DataFrame, rate: float,
                         hg_only=hg_only, abs_only=abs_only,
                         post_resample_rate=final_resample_rate,
                         precision=precision)
+        high_gamma = None
     tf = unpack(wv.drop("phase"), values_col="amp", value_col="amp",
                 extra_keys=("band", "cf", "sd"))
     stages["wvlt_amp"] = tf
@@ -156,7 +170,8 @@ def preprocess(signals: DataFrame, rate: float,
             extra_keys=("band", "cf", "sd"))
     return PreprocessResult(tf=tf, stages=stages,
                             tf_packed=wv if not abs_only
-                            else wv.drop("phase"))
+                            else wv.drop("phase"),
+                            high_gamma=high_gamma)
 
 
 def _snap_seg_len(base: int, new_freq: float, old_freq: float) -> int:
@@ -320,10 +335,17 @@ def high_gamma_trace(result: PreprocessResult, baseline_seconds: float = 0.25,
     """Tutorial tail: z-score against the first `baseline_seconds`, then
     mean over bands (examples/plot_ECoG_preprocessing_tutorial.py:164-167).
 
-    Runs on the packed wavelet rows when the result carries them (array
-    folds + one small band zip — see operators/zscore.high_gamma_packed);
-    falls back to the long window/groupBy formulation otherwise."""
+    Three paths of one math, picked by what the result carries:
+    - `high_gamma` (the fused pipeline): the CAR->wavelet group map emits
+      one high-gamma row per channel, unpacked once — no shuffle of its
+      own (operators/kernel_ops.car_high_gamma_arrow);
+    - `tf_packed` only (fuse=False, hand-built results): one Arrow group
+      per channel over the band rows (operators/zscore.high_gamma_packed);
+    - neither: the long window/groupBy formulation (operators/zscore).
+    The first two run dsp.kernels.high_gamma."""
     n_baseline = int(baseline_seconds * final_rate)
+    if result.high_gamma is not None:
+        return unpack(result.high_gamma(n_baseline), value_col="amp")
     if result.tf_packed is not None:
         return high_gamma_packed(result.tf_packed, n_baseline,
                                  values_col="amp")

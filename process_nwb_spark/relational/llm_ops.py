@@ -759,10 +759,11 @@ def doc_fingerprint_winnow(spark, sf_dir):
     # window sort, and ran a global DISTINCT (two full-width exchanges +
     # a sort); this plan has NO exchange at all past the spread — the
     # 100 TB cost is exactly one pass over the corpus. The hash array is
-    # bound via the single-element-transform idiom (see
-    # operators/zscore.high_gamma_packed): naming it with withColumn
-    # would let CollapseProject inline the O(n) md5 fold into the
-    # per-window lambda and recompute it per element.
+    # bound once per row by wrapping it in a one-element array and
+    # transforming that (element_at(transform(array(struct(h)),
+    # st -> ...), 1)): a lambda variable cannot be inlined, whereas naming
+    # the array with withColumn would let CollapseProject inline the O(n)
+    # md5 fold into the per-window lambda and recompute it per element.
     d = spread(T(spark, sf_dir, "documents"))
     words = _words()
     k = 3

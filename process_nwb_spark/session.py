@@ -11,6 +11,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """24 GiB, capped at half of physical memory. In local mode the driver
+    heap holds every task's data; a cap above what the machine has lets
+    the JVM grow past physical memory, and the kernel's OOM killer then
+    ends it mid-job (seen on a 16 GiB, 4-core host: the JVM reached
+    15 GiB resident and every later test failed on a dead gateway)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):   # no sysconf here
+        return "24g"
+    return f"{max(1024, min(24 * 1024, phys // 2 ** 21))}m"
+
+
 def get_spark(app_name: str = "process-nwb-spark", master: str | None = None,
               shuffle_partitions: int | None = None, **extra) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -59,7 +72,8 @@ def get_spark(app_name: str = "process-nwb-spark", master: str | None = None,
         # receive pushed filters for partition pruning
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

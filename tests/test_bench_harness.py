@@ -35,8 +35,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _run_bench(tmp_path, inject: str, extra_env: dict | None = None):
     full_out = tmp_path / "full.json"
     curve_log = tmp_path / "curve_stderr.log"
+    # cores_scaling relaunches sessions and re-times the expensive sf1
+    # faces — far too heavy for these contract tests; off even when the
+    # shell exports it, unless a test opts in via extra_env (the
+    # fault-isolation test injects a failure into it, which raises before
+    # any session work)
     env = dict(
-        os.environ,
+        dict(os.environ, SPARK_GRAFT_BENCH_CORES_SECTION="0"),
         **(extra_env or {}),
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_BENCH_RUNS="1",
@@ -49,11 +54,6 @@ def _run_bench(tmp_path, inject: str, extra_env: dict | None = None):
         # the headline itself must be cheap here; scaling never runs
         SPARK_GRAFT_BENCH_DRIVER_MEM="8g",
     )
-    # cores_scaling relaunches sessions and re-times the expensive sf1
-    # faces — far too heavy for these contract tests; off unless a test
-    # opts in via extra_env (the fault-isolation test injects a failure
-    # into it, which raises before any session work)
-    env.setdefault("SPARK_GRAFT_BENCH_CORES_SECTION", "0")
     # stderr MERGED into stdout: the driver's tail capture is combined,
     # and the r11 loss happened on the combined stream — assert on it
     r = subprocess.run(
@@ -282,3 +282,15 @@ def test_curve_child_respawn_end_to_end(tmp_path):
     assert "curve-point-once" in point["retry"]["after"]
     assert point["spark_one_job"] > 0 and point["numpy_serial"] > 0
     assert "err" not in point and "skipped" not in point
+
+
+def test_cores_scaling_ratios_survive_sub_millisecond_minimum():
+    """A sample under 0.5 ms shows as 0.0; the ratios divide the raw
+    samples, so one such sample no longer voids the section."""
+    import bench
+
+    e = bench._scaling_entry([0.0004, 0.0010], [0.0012, 0.0020])
+    assert e["full"] == {"min": 0.0, "median": 0.001}
+    assert e["ratio_min"] == 3.0
+    assert e["ratio_median"] == round(0.0016 / 0.0007, 2)
+    assert bench._scaling_entry([0.0, 0.0], [0.1, 0.1])["ratio_min"] is None

@@ -76,3 +76,16 @@ def test_r15_window_is_staleness_ordered():
     assert r7_remaining == set(head[n1:n1 + len(r7_remaining)])
     # 3 plan-rewritten + 24 size-gate faces + the 28 stale r7 cohort
     assert len(head) == 3 + 24 + 28
+
+
+def test_default_driver_heap_fits_the_machine(monkeypatch):
+    """The engine's default heap is half of physical memory, at most
+    24 GiB: a larger cap let the JVM grow until the OOM killer ended it."""
+    from process_nwb_spark import session
+
+    page = 4096
+    for gib, want in ((16, "8192m"), (64, "24576m"), (1, "1024m")):
+        pages = gib * 2 ** 30 // page
+        monkeypatch.setattr(session.os, "sysconf", lambda k, p=pages: {
+            "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": p}[k])
+        assert session._default_driver_memory() == want

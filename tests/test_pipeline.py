@@ -197,6 +197,62 @@ def test_high_gamma_packed_equals_long_formulation(spark, dense):
                                rtol=1e-9, atol=1e-12)
 
 
+def _hg_sorted(hg):
+    return (hg.toPandas().sort_values(["sample_idx", "channel"])
+            .amp.to_numpy())
+
+
+@pytest.mark.parametrize("fuse", [True, False], ids=["fused", "unfused"])
+def test_high_gamma_trace_matches_dense(spark, dense, fuse):
+    """Both packed tails — the fused group map's emitter and
+    high_gamma_packed over a fuse=False band table — against the dense
+    kernels followed by a NumPy baseline z-score and band mean."""
+    res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                     precision="double", fuse=fuse)
+    assert (res.high_gamma is not None) == fuse
+    amp, _ = _dense_pipeline(dense)                  # (time, ch, band)
+    base = amp[:int(0.25 * FINAL)]
+    want = ((amp - base.mean(axis=0)) / base.std(axis=0)).mean(axis=2)
+    got = _hg_sorted(high_gamma_trace(res, 0.25, FINAL))
+    np.testing.assert_allclose(got.reshape(want.shape), want,
+                               rtol=1e-7, atol=1e-7)
+
+
+def test_high_gamma_short_recording_uses_real_baseline_length(spark):
+    """A recording shorter than the baseline window: both packed tails
+    z-score against the samples it has, like the long formulation."""
+    from process_nwb_spark.pipelines import PreprocessResult
+
+    X = generate_synthetic_data(0.5, 4, RATE, seed=3)   # 125 final samples
+    res = preprocess(to_long_df(spark, X), RATE, INIT, FINAL,
+                     precision="double")
+    want = _hg_sorted(high_gamma_trace(PreprocessResult(tf=res.tf), 1.0,
+                                       FINAL))
+    assert len(want) == 4 * 125
+    for r in (res, PreprocessResult(tf=res.tf, tf_packed=res.tf_packed)):
+        np.testing.assert_allclose(
+            _hg_sorted(high_gamma_trace(r, 1.0, FINAL)), want,
+            rtol=1e-9, atol=1e-12)
+
+
+def test_high_gamma_trace_partition_stable(spark, dense):
+    """Each packed tail sums the bands in band order, so the trace is
+    bitwise identical at 7 and 64 shuffle partitions."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    outs = {}
+    try:
+        for n in (7, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            for fuse in (True, False):
+                res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                                 precision="double", fuse=fuse)
+                outs[n, fuse] = _hg_sorted(high_gamma_trace(res, 0.25, FINAL))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for fuse in (True, False):
+        np.testing.assert_array_equal(outs[7, fuse], outs[64, fuse])
+
+
 @pytest.mark.parametrize("post_resample_rate", [None, 200.0])
 def test_reference_worst_case_shapes(spark, post_resample_rate):
     """The reference's own e2e fixture — 64 ch x 10.12324567 s generated at
