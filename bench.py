@@ -396,8 +396,8 @@ def _timed_face(registry, name, spark, data_dir) -> float:
     return _timed_noop(registry[name].fn(spark, data_dir))
 
 
-def bench_sf1(spark, registry, sf_dir: str, sf01_timings: dict,
-              sf01_medians: dict) -> dict:
+def bench_sf1(spark, registry, sf_dir: str,
+              sf01_samples: dict[str, list[float]]) -> dict:
     """Re-time SF1_SUBSET on a 10x scale-up of sf_dir; ratios vs the
     main-loop sf0.1 numbers. Generation is deterministic,
     key-consistent, and cached across bench runs
@@ -405,8 +405,6 @@ def bench_sf1(spark, registry, sf_dir: str, sf01_timings: dict,
     median and min recorded per face (same noise discipline as the
     headline — the r9 block's min-of-2 made cold-pass artifacts like
     graph_triangles' 53-vs-33 s look like growth)."""
-    import statistics
-
     from process_nwb_spark.benchdata import gen_scaled_dir
 
     dest = os.path.join(tempfile.gettempdir(), "spark_graft_bench", "sf1x10")
@@ -423,7 +421,7 @@ def bench_sf1(spark, registry, sf_dir: str, sf01_timings: dict,
     # ambient-load windows
     base_extra: dict[str, list[float]] = {
         n: [] for n in SF1_SUBSET
-        if n not in sf01_timings or n in WHOLE_CALLABLE}
+        if n not in sf01_samples or n in WHOLE_CALLABLE}
     from process_nwb_spark.relational.core import clear_persist_slots
 
     for _ in range(passes):
@@ -440,24 +438,31 @@ def bench_sf1(spark, registry, sf_dir: str, sf01_timings: dict,
                     _drop_resident_rdds(spark)
     out = {}
     for name, s in samples.items():
-        t1_min = round(min(s), 3)
-        t1_med = round(statistics.median(s), 3)
-        if name in base_extra:
-            base = round(min(base_extra[name]), 3)
-            base_med = round(statistics.median(base_extra[name]), 3)
-        else:
-            base = sf01_timings.get(name)
-            base_med = sf01_medians.get(name)
-        e = {"sf0.1": base, "sf1": t1_min,
-             "ratio": round(t1_min / base, 2) if base else None,
-             "sf0.1_median": base_med, "sf1_median": t1_med,
-             "ratio_median": (round(t1_med / base_med, 2)
-                              if base_med else None)}
+        e = _growth_entry(s, base_extra[name] if name in base_extra
+                          else sf01_samples.get(name))
         if name in WHOLE_CALLABLE:
             e["timing"] = "whole_callable"
         out[name] = e
     return {"factor": 10, "gen_sec": gen_s, "n_passes": passes,
             "queries": out}
+
+
+def _growth_entry(sf1: list[float], base: list[float] | None) -> dict:
+    """One face's sf1-vs-sf0.1 growth record from its raw samples
+    (seconds); the ratios come from `_ratio` over unrounded statistics.
+    A face with no sf0.1 samples gets None for its base and ratios."""
+    import statistics
+
+    def shown(v):
+        return round(v, 3) if v is not None else None
+
+    t1_min, t1_med = min(sf1), statistics.median(sf1)
+    b_min, b_med = ((min(base), statistics.median(base)) if base
+                    else (None, None))
+    return {"sf0.1": shown(b_min), "sf1": shown(t1_min),
+            "ratio": _ratio(t1_min, b_min),
+            "sf0.1_median": shown(b_med), "sf1_median": shown(t1_med),
+            "ratio_median": _ratio(t1_med, b_med)}
 
 
 def bench_skew(spark) -> dict:
@@ -551,15 +556,16 @@ def bench_assemble_v3(spark, sf_dir: str) -> dict:
     dest = os.path.join(tempfile.gettempdir(), "spark_graft_bench", "sf1x10")
     gen_scaled_dir(spark, sf_dir, 10, dest)   # cached after bench_sf1
 
-    out = {}
+    out, mins = {}, {}
     for label, d in (("sf0.1", sf_dir), ("sf1", dest)):
         ts = []
         for _ in range(3):
             ts.append(_timed_noop(assemble_v3(T(spark, d, "documents"))))
             clear_persist_slots()
+        mins[label] = min(ts)
         out[label] = {"min": round(min(ts), 3),
                       "median": round(statistics.median(ts), 3)}
-    out["ratio"] = round(out["sf1"]["min"] / out["sf0.1"]["min"], 2)
+    out["ratio"] = _ratio(mins["sf1"], mins["sf0.1"])
     out["exchanges_sf0.1"] = count_exchanges(
         assemble_v3(T(spark, sf_dir, "documents")))
     return out
@@ -646,24 +652,27 @@ def bench_cores_scaling(spark, registry, sf_dir: str):
                         for f, v in full_times.items()}}
 
 
-def _scaling_entry(full: list[float], low: list[float]) -> dict:
-    """One face's cores-scaling record from its raw samples (seconds).
-    The ratios divide the UNROUNDED statistics — a sub-millisecond
-    minimum rounds to 0.0 — and are rounded only for display; a
-    non-positive denominator yields None instead of voiding the section."""
-    import statistics
+def _ratio(num: float, den: float | None) -> float | None:
+    """num/den for a bench record. Callers pass UNROUNDED statistics — a
+    sub-millisecond minimum rounds to 0.0 — and only the quotient is
+    rounded, for display; a missing or non-positive denominator yields
+    None instead of voiding the section."""
+    return round(num / den, 2) if den is not None and den > 0 else None
 
-    def ratio(num: float, den: float) -> float | None:
-        return round(num / den, 2) if den > 0 else None
+
+def _scaling_entry(full: list[float], low: list[float]) -> dict:
+    """One face's cores-scaling record from its raw samples (seconds),
+    ratios by `_ratio`."""
+    import statistics
 
     def shown(v: list[float]) -> dict:
         return {"min": round(min(v), 3),
                 "median": round(statistics.median(v), 3)}
 
     return {"full": shown(full), "low": shown(low),
-            "ratio_min": ratio(min(low), min(full)),
-            "ratio_median": ratio(statistics.median(low),
-                                  statistics.median(full))}
+            "ratio_min": _ratio(min(low), min(full)),
+            "ratio_median": _ratio(statistics.median(low),
+                                   statistics.median(full))}
 
 
 # once-only per-point injection state for the retry-path tests
@@ -1286,8 +1295,7 @@ def main():
         force = os.environ.get("SPARK_GRAFT_BENCH_SCALE_FORCE") == "1"
         if scale_on and (abs(sf - 0.1) < 1e-9 or force):
             _guarded("sf1",
-                     lambda: bench_sf1(spark, registry, sf_dir, timings,
-                                       medians))
+                     lambda: bench_sf1(spark, registry, sf_dir, samples))
             _guarded("skew", lambda: bench_skew(spark))
             _guarded("assemble_v3",
                      lambda: bench_assemble_v3(spark, sf_dir))

@@ -243,6 +243,22 @@ def subtract_car(X: np.ndarray, mean_frac: float = 0.95, round_func=np.ceil,
                    precision=precision)
 
 
+def high_gamma_stats(amps: np.ndarray, n_baseline: int):
+    """Per-band baseline (mean, population std), each (n_bands, 1), over
+    the first `n_baseline` columns of (n_bands, n_time) amplitudes; a
+    trace shorter than the window uses its real length."""
+    base = np.asarray(amps, dtype=np.float64)[:, :n_baseline]
+    return base.mean(axis=1, keepdims=True), base.std(axis=1, keepdims=True)
+
+
+def high_gamma_apply(amps: np.ndarray, mu: np.ndarray,
+                     sd: np.ndarray) -> np.ndarray:
+    """z-score (n_bands, n) amplitudes with fixed per-band stats and
+    average the bands, summed in row order -> (n,). Column-wise, so a
+    trace cut into time blocks gives bitwise the same values per block."""
+    return ((np.asarray(amps, dtype=np.float64) - mu) / sd).mean(axis=0)
+
+
 def high_gamma(amps: np.ndarray, n_baseline: int) -> np.ndarray:
     """The tutorial's tail on one channel: (n_bands, n_time) band
     amplitudes, rows in band order -> the (n_time,) high-gamma trace.
@@ -252,7 +268,4 @@ def high_gamma(amps: np.ndarray, n_baseline: int) -> np.ndarray:
     Always float64.
     Parity: examples/plot_ECoG_preprocessing_tutorial.py:164-167."""
     amps = np.asarray(amps, dtype=np.float64)
-    base = amps[:, :n_baseline]
-    mu = base.mean(axis=1, keepdims=True)
-    sd = base.std(axis=1, keepdims=True)
-    return ((amps - mu) / sd).mean(axis=0)
+    return high_gamma_apply(amps, *high_gamma_stats(amps, n_baseline))

@@ -7,11 +7,14 @@ an ARRAY<DOUBLE>) and cross into Python through Arrow only, by two maps:
   single pack() shuffle, any chain of these runs pipelined inside one
   stage, one crossing per operator (or one total with `fused_ops_arrow`);
 - the per-series group map (`_car_group_map`, `applyInArrow`) — gathers a
-  series' channels for the CAR, optionally followed by the wavelet.
+  series' channels (or one segment of them) for the CAR, optionally
+  followed by the wavelet.
 
 Both hand channel arrays to an emitter: `_values_rows` (one packed row per
-channel), `_band_rows` (the band table, one row per channel x band) or
-`_high_gamma_rows` (one packed high-gamma trace per channel).
+channel), `_band_rows` (the band table, one row per channel x band),
+`_high_gamma_rows` (one packed high-gamma trace per channel) or
+`segmented.cut_pieces` (a CAR'd segment core cut into the next stage's
+segment pieces).
 Signal arrays cross as one flat float64 buffer + offsets in both
 directions, never as per-row boxed objects.
 
@@ -103,8 +106,9 @@ def _bounded_row_groups(arrays, cap=2 ** 30):
 
 def _values_rows(fn):
     """Emitter: channel i (keys row i, array xs[i]) -> one packed row
-    `fn(xs[i])`, in record batches of bounded flattened length (an
-    upsampling fn can grow the output past the int32 offset ceiling)."""
+    `fn(xs[i])` after every key column, in record batches of bounded
+    flattened length (an upsampling fn can grow the output past the int32
+    offset ceiling)."""
     import pyarrow as pa
 
     def emit(keys, xs):
@@ -113,8 +117,8 @@ def _values_rows(fn):
         for lo, hi in _bounded_row_groups(outs):
             k = keys.slice(lo, hi - lo)
             yield pa.RecordBatch.from_arrays(
-                [k.column(0), k.column(1), _pack_list_array(outs[lo:hi])],
-                [*KEYS, "values"])
+                [*k.columns, _pack_list_array(outs[lo:hi])],
+                [*k.schema.names, "values"])
 
     return emit
 
@@ -211,29 +215,42 @@ def _map_values_arrow(df: DataFrame, emit,
 
 
 def _car_group_map(df: DataFrame, emit, schema: str, mean_frac: float,
-                   precision: str) -> DataFrame:
+                   precision: str, by: tuple[str, ...] = ()) -> DataFrame:
     """The per-series group map: one applyInArrow group gathers a series'
     channels in channel order, K.subtract_car references the
-    (n_time x n_channels) block, and the CAR'd channels go to `emit`.
+    (n_time x n_channels) block, and the CAR'd channels go to `emit` with
+    their keys (series_id, channel, *by).
 
-    Scale bound: one group = one series' block. For recordings past
-    executor memory, use the segmented pipeline (CAR is per-timepoint, so
-    its window form is exact and bounded)."""
+    `by` adds group keys: the segmented pipeline groups by
+    (series_id, seg, g0), so one group is n_channels x one segment core —
+    exact, since the CAR is per timepoint and every channel shares the
+    segment bounds. Channels of unequal length in a group fail loudly.
+    Without `by`, one group = one series' block; for recordings past
+    executor memory, use the segmented pipeline."""
     import pyarrow as pa
+
+    cols = [*KEYS, *by]
 
     def fn(table):
         order = np.argsort(table.column("channel").to_numpy(
             zero_copy_only=False))
         flat, bounds = _list_col_to_numpy(table.column("values"))
+        lens = np.diff(bounds)
+        if (lens != lens[0]).any():
+            key = {c: table.column(c)[0].as_py() for c in ("series_id", *by)}
+            raise ValueError(
+                f"CAR group {key}: channels hold {sorted(set(lens.tolist()))}"
+                f" samples; the per-timepoint CAR needs every channel on "
+                f"the same time axis")
         X = np.stack([flat[bounds[i]:bounds[i + 1]] for i in order], axis=1)
         Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
                                        precision=precision),
                         dtype=np.float64)
-        keys = table.select(KEYS).combine_chunks().to_batches()[0]
+        keys = table.select(cols).combine_chunks().to_batches()[0]
         return pa.Table.from_batches(list(emit(
             keys.take(order), [Xc[:, i] for i in range(Xc.shape[1])])))
 
-    return df.groupBy("series_id").applyInArrow(fn, schema)
+    return df.groupBy("series_id", *by).applyInArrow(fn, schema)
 
 
 def fused_ops_arrow(df: DataFrame, *fns) -> DataFrame:

@@ -77,9 +77,16 @@ def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
 
 
 def unpack(df: DataFrame, values_col: str = "values",
-           value_col: str = "value", extra_keys=()) -> DataFrame:
-    """Packed -> long via posexplode (narrow, JVM-side)."""
+           value_col: str = "value", extra_keys=(),
+           offset_col: str | None = None) -> DataFrame:
+    """Packed -> long via posexplode (narrow, JVM-side). With `offset_col`
+    each array starts at that row's global sample index (a segment's
+    `g0`, operators/segmented.py) instead of 0."""
     keys = [k for k in (*KEYS, *extra_keys) if k in df.columns]
+    offset = [offset_col] if offset_col else []
+    idx = F.col("sample_idx")
+    if offset_col:
+        idx = idx + F.col(offset_col)
     return df.select(
-        *keys, F.posexplode(values_col).alias("sample_idx", value_col)
-    ).withColumn("sample_idx", F.col("sample_idx").cast("bigint"))
+        *keys, *offset, F.posexplode(values_col).alias("sample_idx", value_col)
+    ).select(*keys, idx.cast("bigint").alias("sample_idx"), value_col)

@@ -2,16 +2,23 @@
 long for one task (SURVEY.md §7 "whole-axis FFT vs partitioned data").
 
 The whole-channel operators (kernel_ops.py) need a channel's full time axis
-in one task. For arbitrarily long recordings this operator instead:
+in one task. For arbitrarily long recordings this module instead:
 
-1. assigns every long-layout sample to its core segment plus any segment
-   whose overlap window covers it (pure Catalyst: a small candidate array,
-   filter, explode — narrow);
-2. groups by (series_id, channel, seg) — ONE shuffle whose groups are
-   bounded at seg_len + 2*overlap samples regardless of recording length;
-3. runs the dense kernel per segment inside `applyInPandas`, trims each
-   segment's overlap from the output, and emits long rows with exact
-   global sample indices (no second shuffle, no reconcatenation pass).
+1. gathers the long rows ONCE into per-(series_id, channel, seg) arrays:
+   every sample joins its core segment plus any segment whose overlap
+   window covers it (`explode(sequence(..))`, codegen'd and narrow), then
+   one `groupBy` collects the values and their sample_idx — the only step
+   that sees per-sample rows; groups are bounded at seg_len + 2*overlap
+   samples regardless of recording length;
+2. runs the dense kernel per segment array inside one Arrow row map
+   (`mapInArrow`), sorts by sample_idx (collect_list arrival order is not
+   a contract), and trims each segment's overlap from the output
+   (`_segment_output`), emitting one packed row per segment core with its
+   global output start `g0`;
+3. explodes to long rows with exact global sample indices
+   (`repack.unpack(offset_col="g0")`) only when a caller asks for the long
+   layout — the segmented pipeline keeps the packed segment rows through
+   its CAR, stage-B and high-gamma stages (pipelines._preprocess_segmented).
 
 Numerics: each segment is padded/filtered on its own frequency grid, so
 the result is equivalent-but-not-bitwise vs the whole-channel op —
@@ -25,7 +32,8 @@ overlap*ratio would shift every interior segment by a sub-sample,
 measured 0.109 abs error on a unit tone at the worst-case fixture rates).
 Inputs are assumed gapless per (series, channel) starting at sample_idx
 0; violations raise inside the kernel instead of silently dropping or
-misplacing core samples.
+misplacing core samples. A NULL sample gathers as NaN at its own index,
+as in `repack.pack`.
 
 Reference analog: the pad/trim machinery (utils.py:106-167) is reused
 unchanged inside each segment; the chunked writer
@@ -38,14 +46,20 @@ from fractions import Fraction
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dsp import kernels as K
+from .car import _nan_safe_value
+from .kernel_ops import _list_col_to_numpy, _pack_list_array
+from .repack import KEYS, unpack
 
-LONG_SCHEMA = ("series_id STRING, channel INT, sample_idx BIGINT, "
-               "value DOUBLE")
+SEGMENT_SCHEMA = ("series_id STRING, channel INT, seg BIGINT, g0 BIGINT, "
+                  "values ARRAY<DOUBLE>")
+SEGMENT_BAND_SCHEMA = ("series_id STRING, channel INT, seg BIGINT, "
+                       "g0 BIGINT, band INT, amp ARRAY<DOUBLE>")
+PIECE_SCHEMA = ("series_id STRING, channel INT, seg BIGINT, start BIGINT, "
+                "values ARRAY<DOUBLE>")
 
 
 def ratio_denominator(new_freq: float, old_freq: float) -> int:
@@ -99,25 +113,37 @@ def _validate(seg_len: int, overlap: int, new_freq: float, old_freq: float):
             f"{snap_overlap(overlap, new_freq, old_freq)}")
 
 
-def _explode_segments(signals: DataFrame, L: int, V: int,
-                      extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Assign each sample to its core segment + overlap-covering neighbors
-    (narrow: candidate array -> filter -> explode). Shared by both kernel
-    shapes so the subtle assignment predicate exists exactly once.
-    `extra_cols` ride through unchanged (per-series-constant metadata)."""
+def gather_segments(signals: DataFrame, L: int, V: int,
+                    meta_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Long rows -> one row per (series_id, channel, seg) holding the
+    segment's values `_v` and their sample indices `_i`, both collected in
+    the same aggregation, as repack.pack does (so the two lists stay
+    pairwise aligned; their order is not a contract and the consumer
+    sorts). Sample i joins every segment s >= 0 with
+    s*L - V <= i < (s+1)*L + V: at most three, since V < L.
+    `meta_cols` are per-series-constant columns that ride along (first
+    value per group)."""
     i = F.col("sample_idx")
-    s0 = F.floor(i / L).cast("bigint")
-    cand = F.array(s0 - 1, s0, s0 + 1)
-    segs = F.filter(
-        cand, lambda s: (s >= 0) & (i >= s * L - V) & (i < (s + 1) * L + V))
-    return signals.select(
-        "series_id", "channel", F.explode(segs).alias("seg"),
-        "sample_idx", "value", *extra_cols)
+    segs = F.sequence(F.greatest(F.floor((i - V) / L), F.lit(0)),
+                      F.floor((i + V) / L))
+    return (signals.select(*KEYS, F.explode(segs).alias("seg"), "sample_idx",
+                           # NULL -> NaN: collect_list skips a NULL value
+                           # but keeps its sample_idx, shifting every later
+                           # sample one index earlier
+                           _nan_safe_value("value").alias("value"),
+                           *meta_cols)
+            .groupBy(*KEYS, "seg")
+            .agg(F.collect_list("value").alias("_v"),
+                 F.collect_list("sample_idx").alias("_i"),
+                 *(F.first(c).alias(c) for c in meta_cols)))
 
 
-def _segment_output(pdf: pd.DataFrame, fn, L: int, V: int, r: Fraction):
-    """Run `fn` on one sorted segment group and trim to its core's output:
-    returns (meta_row, g0, kept 2-D ndarray (n_kept, n_cols)).
+def _segment_output(seg: int, idx: np.ndarray, x: np.ndarray, fn, L: int,
+                    V: int, r: Fraction, where: str):
+    """Run `fn` on one segment's samples and trim to its core's output:
+    returns (g0, kept 2-D ndarray (n_kept, n_cols)). `idx`/`x` may arrive
+    in any order; they are sorted by idx here. `where` names the
+    (series, channel) in error messages.
 
     The overlap/core index math lives ONLY here, in EXACT integer
     arithmetic on the rational ratio `r` — float `core * r` can land one
@@ -127,27 +153,30 @@ def _segment_output(pdf: pd.DataFrame, fn, L: int, V: int, r: Fraction):
     series or one not starting at sample_idx 0 would otherwise silently
     drop or misplace the core (left_ov would go negative and the kept
     slice could be empty)."""
-    pdf = pdf.sort_values("sample_idx")
-    seg = int(pdf["seg"].iloc[0])
-    idx = pdf["sample_idx"].to_numpy()
+    num, den = r.numerator, r.denominator
+    g0 = seg * L * num // den                # integral by _validate
+    if len(idx) != len(x):
+        raise ValueError(
+            f"segmented kernel: segment {seg} of {where} holds {len(x)} "
+            f"values for {len(idx)} sample indices")
+    order = np.argsort(idx, kind="stable")
+    idx, x = idx[order], np.asarray(x, dtype=np.float64)[order]
     # strictly consecutive, not just span==count: a duplicated index
     # would mask a missing one and the kernel would silently run over a
     # misaligned buffer
     if not np.array_equal(idx, np.arange(idx[0], idx[0] + len(idx))):
         raise ValueError(
             f"segmented kernel: sample_idx not contiguous inside segment "
-            f"{seg} of {pdf['series_id'].iloc[0]!r}"
-            f"/ch{int(pdf['channel'].iloc[0])} "
-            f"(span {int(idx[-1] - idx[0]) + 1}, {len(idx)} rows, dups or "
-            f"gaps present); segmented ops require gapless input")
+            f"{seg} of {where} (span {int(idx[-1] - idx[0]) + 1}, "
+            f"{len(idx)} rows, dups or gaps present); segmented ops "
+            f"require gapless input")
     core = int(((idx >= seg * L) & (idx < (seg + 1) * L)).sum())
     if core == 0:
         # overlap-only spill group: this dataset holds a neighboring
         # segment's overlap rows but none of this segment's core (a
         # file-cut boundary in a streaming micro-batch, or a truncated
         # recording end) — the segment contributes nothing here
-        return ((pdf["series_id"].iloc[0], int(pdf["channel"].iloc[0])),
-                seg * L * r.numerator // r.denominator, np.empty((0, 1)))
+        return g0, np.empty((0, 1))
     # two legitimate starts for a core-bearing group: the overlap-covered
     # form (seg*L - V) and the bare core boundary (seg*L) — the latter
     # when upstream data for the overlap isn't in this dataset (a
@@ -162,12 +191,10 @@ def _segment_output(pdf: pd.DataFrame, fn, L: int, V: int, r: Fraction):
             f"{int(idx[0])}, expected one of {sorted(allowed)}; series "
             f"must start at sample_idx 0 per (series, channel), or on a "
             f"whole-segment boundary for file-cut micro-batches")
-    x = pdf["value"].to_numpy(dtype=np.float64)
     left_ov = max(0, int(seg * L - idx[0]))  # V, or 0 at a bare boundary
     out = np.asarray(fn(x), dtype=np.float64)
     if out.ndim == 1:
         out = out[:, np.newaxis]
-    num, den = r.numerator, r.denominator
     k0 = left_ov * num // den                # integral by _validate
     n_out = -(-core * num // den)            # exact ceil(core * r)
     if out.shape[0] < k0 + n_out:
@@ -180,9 +207,7 @@ def _segment_output(pdf: pd.DataFrame, fn, L: int, V: int, r: Fraction):
             f"least {k0 + n_out} (overlap {left_ov} -> {k0}, core {core} "
             f"-> {n_out}); kernel output ratio and declared `ratio` "
             f"disagree")
-    kept = out[k0:k0 + n_out]
-    g0 = seg * L * num // den                # integral by _validate
-    return (pdf["series_id"].iloc[0], int(pdf["channel"].iloc[0])), g0, kept
+    return g0, out[k0:k0 + n_out]
 
 
 def _as_fraction(ratio) -> Fraction:
@@ -196,31 +221,135 @@ def _as_fraction(ratio) -> Fraction:
     return Fraction(ratio).limit_denominator(10 ** 9)
 
 
+def _segment_runner(fn, seg_len: int, overlap: int, ratio,
+                    meta_cols: tuple[str, ...], bands: bool):
+    """(sid, ch, seg, idx, x, meta) -> one segment's trimmed core as an
+    Arrow batch: one `values` row, or with `bands` one `amp` row per
+    output column; no rows for an overlap-only spill group. `fn(x)`, or
+    `fn(x, meta)` with `meta_cols`."""
+    import pyarrow as pa
+
+    L, V = int(seg_len), int(overlap)
+    r = _as_fraction(ratio)
+    _validate(L, V, r, 1)
+    names = [*KEYS, "seg", "g0", *(("band", "amp") if bands else ("values",))]
+
+    def run(sid, ch, seg, idx, x, meta):
+        seg_fn = (lambda y: fn(y, meta)) if meta_cols else fn  # noqa: E731
+        g0, kept = _segment_output(int(seg), idx, x, seg_fn, L, V, r,
+                                   f"{sid!r}/ch{ch}")
+        n = (kept.shape[1] if bands else 1) if kept.shape[0] else 0
+        cols = [pa.array([sid] * n, pa.string()),
+                pa.array([ch] * n, pa.int32()),
+                pa.array([seg] * n, pa.int64()),
+                pa.array([g0] * n, pa.int64())]
+        if bands:
+            cols.append(pa.array(np.arange(n, dtype=np.int32)))
+        cols.append(_pack_list_array(
+            [np.ascontiguousarray(kept[:, b]) for b in range(n)]))
+        return pa.RecordBatch.from_arrays(cols, names)
+
+    return run
+
+
+def segment_arrays(signals: DataFrame,
+                   fn: Callable[[np.ndarray], np.ndarray],
+                   seg_len: int, overlap: int,
+                   ratio: float | Fraction = 1.0,
+                   meta_cols: tuple[str, ...] = (),
+                   bands: bool = False) -> DataFrame:
+    """Long rows -> one packed row per segment core: `gather_segments`,
+    then one Arrow row map that runs `fn` on each segment and trims it
+    (SEGMENT_SCHEMA, or SEGMENT_BAND_SCHEMA with `bands`). `g0` is the
+    core's first global output sample index."""
+    run = _segment_runner(fn, seg_len, overlap, ratio, meta_cols, bands)
+
+    def rows(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            v, vb = _list_col_to_numpy(batch.column("_v"))
+            i, ib = _list_col_to_numpy(batch.column("_i"))
+            sids, chs, segs = (batch.column(c).to_pylist()
+                               for c in (*KEYS, "seg"))
+            metas = {c: batch.column(c).to_pylist() for c in meta_cols}
+            for j in range(batch.num_rows):
+                out = run(sids[j], chs[j], segs[j], i[ib[j]:ib[j + 1]],
+                          v[vb[j]:vb[j + 1]],
+                          {c: m[j] for c, m in metas.items()})
+                if out.num_rows:
+                    yield out
+
+    return (gather_segments(signals, int(seg_len), int(overlap), meta_cols)
+            .mapInArrow(rows, SEGMENT_BAND_SCHEMA if bands
+                        else SEGMENT_SCHEMA))
+
+
+def segment_pieces(pieces: DataFrame,
+                   fn: Callable[[np.ndarray], np.ndarray],
+                   seg_len: int, overlap: int,
+                   ratio: float | Fraction = 1.0,
+                   meta_cols: tuple[str, ...] = ()) -> DataFrame:
+    """`segment_arrays` with band rows out, for input that is already cut
+    into segment pieces (PIECE_SCHEMA): one Arrow group per
+    (series_id, channel, seg) joins its few pieces in sample order and
+    runs the same trim. A gap or overlap between pieces fails the trim's
+    contiguity check."""
+    import pyarrow as pa
+
+    run = _segment_runner(fn, seg_len, overlap, ratio, meta_cols, True)
+
+    def group(table):
+        starts = table.column("start").to_numpy()
+        flat, bounds = _list_col_to_numpy(table.column("values"))
+        lens = np.diff(bounds)
+        idx = np.concatenate([np.arange(s, s + n)
+                              for s, n in zip(starts, lens)])
+        first = {c: table.column(c)[0].as_py()
+                 for c in (*KEYS, "seg", *meta_cols)}
+        out = run(first["series_id"], first["channel"], first["seg"], idx,
+                  flat, {c: first[c] for c in meta_cols})
+        return pa.Table.from_batches([out])
+
+    return pieces.groupBy(*KEYS, "seg").applyInArrow(group,
+                                                     SEGMENT_BAND_SCHEMA)
+
+
+def cut_pieces(seg_len: int, overlap: int):
+    """Emitter for kernel_ops._car_group_map(by=("seg", "g0")): each
+    channel's core [g0, g0 + n) is cut into the pieces that the segments
+    of the NEXT stage (length `seg_len`, overlap `overlap`) read from it,
+    as PIECE_SCHEMA rows whose `seg` is the next stage's segment. Every
+    next-stage segment then gathers from at most a few neighbouring cores
+    (`segment_pieces`), never from per-sample rows."""
+    import pyarrow as pa
+
+    L, V = int(seg_len), int(overlap)
+
+    def emit(keys, xs):
+        g0, n = keys.column("g0")[0].as_py(), len(xs[0])
+        cuts = [(s, max(g0, s * L - V), min(g0 + n, (s + 1) * L + V))
+                for s in range(max(0, (g0 - V) // L), (g0 + n - 1 + V) // L + 1)]
+        cuts = [c for c in cuts if c[1] < c[2]]
+        k = keys.take(np.repeat(np.arange(len(xs)), len(cuts)))
+        yield pa.RecordBatch.from_arrays(
+            [k.column(0), k.column(1),
+             pa.array([s for s, _, _ in cuts] * len(xs), pa.int64()),
+             pa.array([lo for _, lo, _ in cuts] * len(xs), pa.int64()),
+             _pack_list_array([x[lo - g0:hi - g0] for x in xs
+                               for _, lo, hi in cuts])],
+            [*KEYS, "seg", "start", "values"])
+
+    return emit
+
+
 def segmented_kernel(signals: DataFrame, fn: Callable[[np.ndarray], np.ndarray],
                      seg_len: int, overlap: int,
                      ratio: float | Fraction = 1.0) -> DataFrame:
     """Apply `fn` (1-D ndarray -> 1-D ndarray of len*ratio) per bounded
     segment of each channel; long layout in, long layout out."""
-    L, V = int(seg_len), int(overlap)
-    r = _as_fraction(ratio)
-    _validate(L, V, r, 1)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        (sid, ch), g0, kept = _segment_output(pdf, fn, L, V, r)
-        return pd.DataFrame({
-            "series_id": sid,
-            "channel": ch,
-            "sample_idx": g0 + np.arange(kept.shape[0], dtype=np.int64),
-            "value": kept[:, 0],
-        })
-
-    return (_explode_segments(signals, L, V)
-            .groupBy("series_id", "channel", "seg")
-            .applyInPandas(run, LONG_SCHEMA))
-
-
-BAND_SCHEMA = ("series_id STRING, channel INT, band INT, "
-               "sample_idx BIGINT, amp DOUBLE")
+    return unpack(segment_arrays(signals, fn, seg_len, overlap, ratio),
+                  offset_col="g0")
 
 
 def segmented_band_kernel(signals: DataFrame,
@@ -230,38 +359,18 @@ def segmented_band_kernel(signals: DataFrame,
                           meta_cols: tuple[str, ...] = ()) -> DataFrame:
     """Fan-out variant of `segmented_kernel`: `fn` maps a 1-D segment to a
     2-D (n_out, n_bands) block (e.g. wavelet amplitudes); output is long
-    over (band, sample_idx). Same bounded-group/one-shuffle layout, same
-    shared segment-assignment and core-trim machinery.
+    over (band, sample_idx). Same gather, row map and trim.
 
     `meta_cols` names extra per-series-constant columns on `signals`
     (e.g. a broadcast-joined catalog length) that ride through the
-    segment shuffle; `fn` is then called `fn(x, meta)` with the group's
-    first-row values as a dict. This keeps per-series constants in the
-    PLAN (a broadcast join) instead of a driver-collected dict in the
-    kernel closure — the closure stays O(1) at millions of series."""
-    L, V = int(seg_len), int(overlap)
-    r = _as_fraction(ratio)
-    _validate(L, V, r, 1)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_fn = fn
-        if meta_cols:
-            meta = {c: pdf[c].iloc[0] for c in meta_cols}
-            seg_fn = lambda x: fn(x, meta)  # noqa: E731
-        (sid, ch), g0, kept = _segment_output(pdf, seg_fn, L, V, r)
-        n_kept, n_bands = kept.shape
-        return pd.DataFrame({
-            "series_id": sid,
-            "channel": ch,
-            "band": np.repeat(np.arange(n_bands, dtype=np.int32), n_kept),
-            "sample_idx": np.tile(g0 + np.arange(n_kept, dtype=np.int64),
-                                  n_bands),
-            "amp": kept.T.ravel(),
-        })
-
-    return (_explode_segments(signals, L, V, extra_cols=meta_cols)
-            .groupBy("series_id", "channel", "seg")
-            .applyInPandas(run, BAND_SCHEMA))
+    segment gather; `fn` is then called `fn(x, meta)` with the group's
+    values as a dict. This keeps per-series constants in the PLAN (a
+    broadcast join) instead of a driver-collected dict in the kernel
+    closure — the closure stays O(1) at millions of series."""
+    return unpack(segment_arrays(signals, fn, seg_len, overlap, ratio,
+                                 meta_cols=meta_cols, bands=True),
+                  values_col="amp", value_col="amp", extra_keys=("band",),
+                  offset_col="g0")
 
 
 def segmented_wavelet_amp(signals: DataFrame, rate: float,

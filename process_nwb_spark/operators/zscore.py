@@ -5,7 +5,8 @@ examples/plot_ECoG_preprocessing_tutorial.py:164-167): per (channel, band),
 compute mean/std over a baseline window (first `n_baseline` samples),
 normalize the whole trace, then average the bands into one "high gamma"
 trace per channel. The default pipeline runs it inside its CAR->wavelet
-group map (kernel_ops.car_high_gamma_arrow); this module holds the forms
+group map (kernel_ops.car_high_gamma_arrow); this module holds the
+segmented pipeline's streamed form (`high_gamma_segments`) and the forms
 for band rows that exist on their own.
 
 Long plan shape: conditional window aggregates over (series, channel,
@@ -69,3 +70,85 @@ def high_gamma_packed(wv: DataFrame, n_baseline: int,
     per_ch = (wv.select(*KEYS, "band", values_col).groupBy(*KEYS)
               .applyInArrow(fn, PACKED_SCHEMA))
     return unpack(per_ch, value_col=values_col)
+
+
+def high_gamma_segments(bands: DataFrame, n_baseline: int) -> DataFrame:
+    """zscore_baseline + band_mean on SEGMENTED band rows (series_id,
+    channel, g0, band, amp ARRAY), one row per (segment core, band) as the
+    segmented pipeline emits them, in ONE pass: repartition by channel,
+    sort each partition by (series_id, channel, g0, band), and stream it
+    through one Arrow row map. Per channel the map buffers the leading
+    segments until they hold `n_baseline` samples (or the channel ends: a
+    trace shorter than the window uses its real length), fixes the
+    per-band stats there (K.high_gamma_stats) and then z-scores each later
+    segment as it arrives (K.high_gamma_apply) — memory is n_baseline +
+    one segment per band, not the channel. Rows out: (series_id, channel,
+    g0, values ARRAY), one per segment; unpack with offset_col="g0".
+    A channel whose segments do not tile its time axis from 0 fails
+    loudly."""
+    import pyarrow as pa
+
+    nb = int(n_baseline)
+    names = [*KEYS, "g0", "values"]
+
+    def segments(batches):
+        """(key, g0, (n_bands, n) block) per segment, from rows sorted by
+        (key, g0, band); a segment's bands may span record batches."""
+        cur, rows = None, []
+        for batch in batches:
+            flat, bounds = _list_col_to_numpy(batch.column("amp"))
+            sids, chs, g0s = (batch.column(c).to_pylist()
+                              for c in (*KEYS, "g0"))
+            for j in range(batch.num_rows):
+                key = (sids[j], chs[j], g0s[j])
+                if key != cur and rows:
+                    yield cur[:2], cur[2], np.stack(rows)
+                    rows = []
+                cur = key
+                rows.append(flat[bounds[j]:bounds[j + 1]])
+        if rows:
+            yield cur[:2], cur[2], np.stack(rows)
+
+    def out(key, g0, trace):
+        return pa.RecordBatch.from_arrays(
+            [pa.array([key[0]], pa.string()), pa.array([key[1]], pa.int32()),
+             pa.array([g0], pa.int64()), _pack_list_array([trace])], names)
+
+    def run(batches):
+        key, pending, stats, nxt = None, [], None, 0
+
+        def release():
+            # fix the stats from the buffered leading segments (the whole
+            # channel when it ends inside the baseline window), emit them
+            st = K.high_gamma_stats(np.concatenate(
+                [b[:, :nb] for _, b in pending], axis=1), nb)
+            return st, [out(key, g, K.high_gamma_apply(b, *st))
+                        for g, b in pending]
+
+        for k, g0, block in segments(batches):
+            if k != key:
+                if pending:
+                    yield from release()[1]
+                key, pending, stats, nxt = k, [], None, 0
+            if g0 != nxt:
+                raise ValueError(
+                    f"high_gamma_segments: {k[0]!r}/ch{k[1]} has a segment "
+                    f"at sample {g0}, expected {nxt}; segments must tile "
+                    f"the trace from sample 0")
+            nxt = g0 + block.shape[1]
+            if stats is not None:
+                yield out(key, g0, K.high_gamma_apply(block, *stats))
+                continue
+            pending.append((g0, block))
+            if nxt >= nb:
+                stats, done = release()
+                pending = []
+                yield from done
+        if pending:
+            yield from release()[1]
+
+    return (bands.select(*KEYS, "g0", "band", "amp")
+            .repartition(*KEYS)
+            .sortWithinPartitions(*KEYS, "g0", "band")
+            .mapInArrow(run, "series_id STRING, channel INT, g0 BIGINT, "
+                             "values ARRAY<DOUBLE>"))

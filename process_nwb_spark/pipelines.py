@@ -42,7 +42,8 @@ from .operators.kernel_ops import (car_high_gamma_arrow, car_wavelet_arrow,
                                    fused_ops_arrow, notch_op, resample_op,
                                    scale_packed, wavelet_op)
 from .operators.repack import pack, unpack
-from .operators.zscore import band_mean, high_gamma_packed, zscore_baseline
+from .operators.zscore import (band_mean, high_gamma_packed,
+                               high_gamma_segments, zscore_baseline)
 
 SCALING = 1e6  # V -> uV, resample.py:11
 
@@ -197,28 +198,72 @@ def _preprocess_segmented(signals: DataFrame, rate: float,
                           precision: str = "single",
                           seg_len: int | None = None,
                           seg_overlap: int = 4096) -> PreprocessResult:
-    """The bounded-memory pipeline: every spectral stage is an
-    overlap-segmented kernel on the LONG layout, so per-task memory is
-    O(seg_len), independent of recording length.
+    """The bounded-memory pipeline: the long rows are gathered ONCE into
+    per-(series, channel, segment) arrays and every later stage runs on
+    packed segment rows, so per-task memory is O(seg_len x n_channels),
+    independent of recording length.
 
-    Physical plan — 3 segment shuffles + 1 CAR window shuffle:
+    Physical plan — 4 data shuffles, each moving arrays, not samples:
       [scale, narrow] ->
-      seg A: fused resample(initial)+notch, one bounded group per
-             (series, channel, segment) ->
-      CAR: window over (series_id, sample_idx) — per-timepoint across
-           channels, group size = n_channels, inherently bounded; no
-           packed row ever holds a whole channel ->
-      seg B: fused wavelet|.| + resample(final), band fan-out.
+      gather (shuffle 1): explode each sample into its <= 3 covering
+             segments, collect per (series, channel, segment) ->
+      seg A: fused resample(initial)+notch in one Arrow row map, trimmed
+             to each segment's core (`g0` = its global start) ->
+      CAR (shuffle 2): one Arrow group per (series, segment) holds
+           n_channels cores on one shared time axis — exact per timepoint
+           — and cuts each CAR'd core into the stage-B segments' pieces ->
+      seg B (shuffle 3): one Arrow group per (series, channel, stage-B
+             segment) over its few pieces: wavelet|.| + resample(final),
+             band fan-out; `_n_time` is broadcast-joined onto the pieces ->
+      high_gamma_trace only (shuffle 4): repartition by channel, sort by
+             `g0`, one streaming Arrow map (zscore.high_gamma_segments).
+    `tf`, `CAR_ln_downsampled` and the trace explode the packed segment
+    rows with their global sample_idx at the end.
 
-    vs the default packed plan (2 shuffles) this pays ~2 extra shuffles
+    vs the default packed plan (2 shuffles) this pays 1-2 extra shuffles
     and segment-overlap recompute — the price of never materializing a
     whole channel. Use it when n_time * n_bands * 8 B approaches the
     executor task budget (SCALE.md "Memory bound")."""
+    f = _segmented_frames(signals, rate, initial_resample_rate,
+                          final_resample_rate, filters=filters,
+                          hg_only=hg_only, mean_frac=mean_frac,
+                          scaling=scaling, precision=precision,
+                          seg_len=seg_len, seg_overlap=seg_overlap)
+    from .dsp.filterbank import band_params
+
+    cfs, sds = band_params(filters, hg_only)
+    cf_arr = F.array(*[F.lit(float(c)) for c in cfs])
+    sd_arr = F.array(*[F.lit(float(s)) for s in sds])
+    bands = f["bands"]
+    tf = unpack(bands.select(
+        *bands.columns,
+        F.element_at(cf_arr, F.col("band") + 1).alias("cf"),
+        F.element_at(sd_arr, F.col("band") + 1).alias("sd")),
+        values_col="amp", value_col="amp", extra_keys=("band", "cf", "sd"),
+        offset_col="g0")
+    return PreprocessResult(
+        tf=tf, stages={"CAR_ln_downsampled": f["car"], "wvlt_amp": tf},
+        high_gamma=partial(high_gamma_segments, bands))
+
+
+def _segmented_frames(signals: DataFrame, rate: float,
+                      initial_resample_rate: float,
+                      final_resample_rate: float, filters: str, hg_only: bool,
+                      mean_frac: float, scaling: float, precision: str,
+                      seg_len: int | None, seg_overlap: int) -> dict:
+    """The segmented pipeline's packed stages (see _preprocess_segmented):
+    "cores" (stage-A segment cores), "car" (the CAR'd signal, long),
+    "pieces" (stage-B segment pieces) and "bands" (stage-B band rows with
+    `g0`), plus the segment geometry."""
+    from fractions import Fraction
+
     import numpy as np
 
-    from .dsp.filterbank import band_params
-    from .operators.segmented import (resample_exact, segmented_band_kernel,
-                                      segmented_kernel, snap_overlap)
+    from .operators.kernel_ops import _car_group_map, _values_rows
+    from .operators.segmented import (PIECE_SCHEMA, SEGMENT_SCHEMA,
+                                      cut_pieces, resample_exact,
+                                      segment_arrays, segment_pieces,
+                                      snap_overlap)
 
     base = int(seg_len) if seg_len is not None else 2 ** 16
     # overlap is a numerics knob (boundary-error tolerance); cap it at a
@@ -231,15 +276,15 @@ def _preprocess_segmented(signals: DataFrame, rate: float,
         assert v < L, (v, L)   # guaranteed by the 2*d floor in _snap_seg_len
         return v
 
-    from fractions import Fraction as _Fr
-
     # exact rate ratios (floats are binary rationals, so these are the
     # kernels' own grids) — the float quotient's best rational could in
     # principle differ and desync trim offsets from kernel output lengths
-    fr1 = _Fr(initial_resample_rate) / _Fr(rate)
-    fr2 = _Fr(final_resample_rate) / _Fr(initial_resample_rate)
+    fr1 = Fraction(initial_resample_rate) / Fraction(rate)
+    fr2 = Fraction(final_resample_rate) / Fraction(initial_resample_rate)
     seg_a = _snap_seg_len(base, initial_resample_rate, rate)
     ov_a = _ov(seg_a, initial_resample_rate, rate)
+    seg_b = _snap_seg_len(base, final_resample_rate, initial_resample_rate)
+    ov_b = _ov(seg_b, final_resample_rate, initial_resample_rate)
 
     # resample_exact, not the parity kernel: inside a segment the parity
     # kernel's pad-rounding would drift the local grid (resample_exact doc)
@@ -250,26 +295,26 @@ def _preprocess_segmented(signals: DataFrame, rate: float,
                                        precision=precision)
 
     scaled = signals.withColumn("value", F.col("value") * float(scaling))
-    ds = segmented_kernel(scaled, stage_a, seg_a, ov_a, ratio=fr1)
+    cores = segment_arrays(scaled, stage_a, seg_a, ov_a, ratio=fr1)
 
-    # CAR on long rows: the window groups by timepoint (n_channels values
-    # per group) — already memory-bounded, no segmentation needed, and
-    # per-timepoint semantics make it exact (no boundary error here).
-    car_ln = subtract_car(ds, mean_frac=mean_frac)
-
-    seg_b = _snap_seg_len(base, final_resample_rate, initial_resample_rate)
-    ov_b = _ov(seg_b, final_resample_rate, initial_resample_rate)
+    # The CAR groups (series, segment): n_channels cores sharing one time
+    # axis, so per-timepoint semantics make it exact (no boundary error).
+    # Double precision: the segmented numerics are pinned to a float64 CAR
+    # (perfbench's segment_replay, tests/test_segmented.py's replay).
+    def car(emit, schema):
+        return _car_group_map(cores, emit, schema, mean_frac, "double",
+                              by=("seg", "g0"))
 
     # The wavelet kernels' unit-L2 normalization depends on the FFT grid
     # length, so a segment-local transform would come out ~sqrt(n/segment)
     # off the whole-channel amplitude convention (K.dense_kernel_norms).
     # Pin each series to its dense-grid constants: one column-pruned
     # metadata aggregate (the per-series length a real catalog would
-    # already know) broadcast-JOINED onto the long rows as `_n_time` —
-    # it rides the segment shuffle as a column, so the kernel closure
-    # stays O(1) and nothing is collected to the driver even at millions
-    # of series. Each worker derives the norms from its group's length
-    # (O(n_padded) math, memoized per distinct length per worker).
+    # already know) broadcast-JOINED onto the stage-B pieces as `_n_time`
+    # — a column of the group, so the kernel closure stays O(1) and
+    # nothing is collected to the driver even at millions of series. Each
+    # worker derives the norms from its group's length (O(n_padded) math,
+    # memoized per distinct length per worker).
     lens = signals.groupBy("series_id").agg(
         (F.max("sample_idx") + 1).cast("bigint").alias("_n_time"))
 
@@ -291,20 +336,15 @@ def _preprocess_segmented(signals: DataFrame, rate: float,
         return resample_exact(np.abs(Xh[:, 0, :]), final_resample_rate,
                               initial_resample_rate, precision=precision)
 
-    bands = segmented_band_kernel(
-        car_ln.join(F.broadcast(lens), "series_id"), stage_b, seg_b, ov_b,
-        ratio=fr2, meta_cols=("_n_time",))
-
-    cfs, sds = band_params(filters, hg_only)
-    cf_arr = F.array(*[F.lit(float(c)) for c in cfs])
-    sd_arr = F.array(*[F.lit(float(s)) for s in sds])
-    tf = bands.select(
-        "series_id", "channel", "band",
-        F.element_at(cf_arr, F.col("band") + 1).alias("cf"),
-        F.element_at(sd_arr, F.col("band") + 1).alias("sd"),
-        "sample_idx", "amp")
-    return PreprocessResult(
-        tf=tf, stages={"CAR_ln_downsampled": car_ln, "wvlt_amp": tf})
+    pieces = car(cut_pieces(seg_b, ov_b), PIECE_SCHEMA)
+    bands = segment_pieces(pieces.join(F.broadcast(lens), "series_id"),
+                           stage_b, seg_b, ov_b, ratio=fr2,
+                           meta_cols=("_n_time",))
+    return {"cores": cores, "pieces": pieces, "bands": bands,
+            "car": unpack(car(_values_rows(lambda x: x), SEGMENT_SCHEMA),
+                          offset_col="g0"),
+            "geometry": {"seg_a": seg_a, "ov_a": ov_a, "seg_b": seg_b,
+                         "ov_b": ov_b, "fr1": fr1, "fr2": fr2}}
 
 
 def preprocess_many(signal_dfs: dict[str, DataFrame], rate: float,
@@ -336,16 +376,24 @@ def high_gamma_trace(result: PreprocessResult, baseline_seconds: float = 0.25,
     mean over bands (examples/plot_ECoG_preprocessing_tutorial.py:164-167).
 
     Three paths of one math, picked by what the result carries:
-    - `high_gamma` (the fused pipeline): the CAR->wavelet group map emits
-      one high-gamma row per channel, unpacked once — no shuffle of its
-      own (operators/kernel_ops.car_high_gamma_arrow);
+    - `high_gamma`, from either pipeline, unpacked once:
+      - fused whole-channel: the CAR->wavelet group map emits one
+        high-gamma row per channel — no shuffle of its own
+        (operators/kernel_ops.car_high_gamma_arrow);
+      - segmented: stage B's band rows are sorted by channel and segment
+        start `g0` and streamed through one Arrow map that fixes the
+        baseline stats from the leading segments and z-scores the rest
+        as they pass — one shuffle, memory n_baseline + one segment
+        (operators/zscore.high_gamma_segments); rows carry `g0`;
     - `tf_packed` only (fuse=False, hand-built results): one Arrow group
       per channel over the band rows (operators/zscore.high_gamma_packed);
     - neither: the long window/groupBy formulation (operators/zscore).
-    The first two run dsp.kernels.high_gamma."""
+    All but the last run dsp.kernels' high-gamma math."""
     n_baseline = int(baseline_seconds * final_rate)
     if result.high_gamma is not None:
-        return unpack(result.high_gamma(n_baseline), value_col="amp")
+        hg = result.high_gamma(n_baseline)
+        return unpack(hg, value_col="amp",
+                      offset_col="g0" if "g0" in hg.columns else None)
     if result.tf_packed is not None:
         return high_gamma_packed(result.tf_packed, n_baseline,
                                  values_col="amp")

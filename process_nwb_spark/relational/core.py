@@ -40,32 +40,40 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# on-disk footprint cache for dim_broadcast: (sf_dir, table) -> bytes.
-# Pure file metadata (os.stat), never query results — the gate decision
-# for a given input directory is deterministic and re-stat'ing per face
-# call would only add syscalls.
+# size cache for dim_broadcast: (parquet path, its mtime) -> bytes. Pure
+# file metadata (parquet footers), never query results; keyed on the
+# path's mtime so a table regenerated in place (benchdata.gen_scaled_dir)
+# is re-sized instead of keeping a stale gate decision.
 _TABLE_BYTES: dict = {}
 
 
-def _table_disk_bytes(sf_dir: str, name: str) -> int:
+def _table_bytes(sf_dir: str, name: str) -> int:
+    """Uncompressed size of a parquet table (a file, or a directory of
+    part files): the sum of its row groups' `total_byte_size` from the
+    footers — what the data occupies once decoded, which is what a
+    broadcast has to hold, not its compressed size on disk."""
     import os
 
-    key = (sf_dir, name)
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:
+        return 0
     if key not in _TABLE_BYTES:
-        path = f"{sf_dir}/{name}.parquet"
+        files = ([os.path.join(root, f) for root, _dirs, fs in os.walk(path)
+                  for f in fs if f.endswith(".parquet")
+                  and not f.startswith((".", "_"))]
+                 if os.path.isdir(path) else [path])
         total = 0
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        else:
+        for f in files:
             try:
-                total = os.path.getsize(path)
-            except OSError:
-                total = 0
+                md = pq.ParquetFile(f).metadata
+            except (OSError, ValueError):   # unreadable: counts as empty
+                continue
+            total += sum(md.row_group(i).total_byte_size
+                         for i in range(md.num_row_groups))
         _TABLE_BYTES[key] = total
     return _TABLE_BYTES[key]
 
@@ -75,25 +83,26 @@ def dim_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     (customer/part/supplier tier). `F.broadcast` ignores size and Spark
     HARD-FAILS a broadcast relation past 8 GB / 512 M rows (guide §3.1),
     so an unconditional hint on an SF-growing table turns 100 TB inputs
-    into a planner error. This helper hints only while every named source
-    table's ON-DISK parquet footprint under sf_dir is below the gate
-    (SPARK_GRAFT_BCAST_GATE_MB, default 512 MB ~ <=2-3 GB in-memory at
-    typical zstd-parquet expansion, comfortably under the 8 GB cap);
-    above it the frame is returned unhinted and AQE picks the strategy
-    from runtime sizes. The decision is file metadata only (no Spark
-    job), deterministic per input dir, and at every benched SF the gated
-    tables are <3 MB on disk, so benched plans are byte-identical to the
-    old unconditional hint. Fixed-cardinality tables (nation/region,
+    into a planner error. This helper hints only while the named source
+    tables' UNCOMPRESSED parquet size under sf_dir (row-group
+    `total_byte_size` from the footers, _table_bytes) sums below the gate
+    (SPARK_GRAFT_BCAST_GATE_MB, default 512 MB, well under the 8 GB cap);
+    gating on compressed file size would let a highly compressible table
+    expand past the cap. Above the gate the frame is returned unhinted and
+    AQE picks the strategy from runtime sizes. The decision is file
+    metadata only (no Spark job), deterministic per input dir, and at
+    every benched SF the gated tables are <3 MB, so benched plans are
+    byte-identical to the old unconditional hint. Fixed-cardinality tables (nation/region,
     1-row scalars, k-bounded codebooks) keep their plain F.broadcast —
     they do not grow with SF.
 
     `df` may be any projection/filter/join derived from the named
-    tables: on-disk size of the full sources is a conservative upper
-    bound for any row/column subset of them."""
+    tables: the size of the full sources is a conservative upper bound
+    for any row/column subset of them."""
     import os
 
     gate_mb = float(os.environ.get("SPARK_GRAFT_BCAST_GATE_MB", "512"))
-    total = sum(_table_disk_bytes(sf_dir, t) for t in tables)
+    total = sum(_table_bytes(sf_dir, t) for t in tables)
     if total <= gate_mb * 1024 * 1024:
         from pyspark.sql import functions as F
 

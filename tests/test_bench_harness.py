@@ -294,3 +294,18 @@ def test_cores_scaling_ratios_survive_sub_millisecond_minimum():
     assert e["ratio_min"] == 3.0
     assert e["ratio_median"] == round(0.0016 / 0.0007, 2)
     assert bench._scaling_entry([0.0, 0.0], [0.1, 0.1])["ratio_min"] is None
+
+
+def test_growth_ratios_survive_sub_millisecond_base():
+    """The sf1 growth and curation ratios divide the raw samples through
+    `_ratio`: a sub-millisecond sf0.1 base shows as 0.0 but still gives
+    a ratio, and a missing base gives None."""
+    import bench
+
+    e = bench._growth_entry([0.0030, 0.0050, 0.0040], [0.0004, 0.0006])
+    assert e["sf0.1"] == 0.0 and e["sf1"] == 0.003
+    assert e["ratio"] == 7.5
+    assert e["ratio_median"] == round(0.004 / 0.0005, 2)
+    assert bench._growth_entry([0.2], None)["ratio"] is None
+    assert bench._ratio(0.0031, 0.0004) == 7.75
+    assert bench._ratio(1.0, 0.0) is None

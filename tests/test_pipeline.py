@@ -349,12 +349,22 @@ def test_segmented_preprocess_worst_case_ratio_composes(spark):
     snap to exactly one denominator while the overlap snapped UP to the
     same value, tripping overlap < seg_len validation with a baffling
     error. The seg_len snap now floors at two denominators, so any
-    requested seg_len composes with the default overlap."""
-    X = generate_synthetic_data(2.0, 2, 12207.03125, seed=0)
+    requested seg_len composes with the default overlap.
+
+    Three channels: the 0.95 CAR needs at least three (with two it trims
+    both away and raises, as the whole-channel path and the reference
+    do)."""
+    from pyspark.sql import functions as F
+
+    X = generate_synthetic_data(2.0, 3, 12207.03125, seed=0)
     res = preprocess(to_long_df(spark, X), 12207.03125, 3200.0, 400.0,
                      precision="double", segmented=True, seg_len=10000)
-    pdf = res.tf.groupBy("band").count().toPandas()
+    pdf = (res.tf.groupBy("band")
+           .agg(F.count("*").alias("count"),
+                F.sum(F.isnan("amp").cast("int")).alias("nan"))
+           .toPandas())
     assert len(pdf) == 6 and (pdf["count"] > 0).all()
+    assert (pdf["nan"] == 0).all(), pdf
 
 
 def test_segmented_preprocess_rejects_phase(spark):

@@ -124,6 +124,29 @@ def test_zscore_tail_adds_bounded_shuffles(spark):
     assert "ObjectHashAggregate" not in tail, plan
 
 
+def test_segmented_plan_moves_packed_segments(spark):
+    """The default segmented preprocess -> high_gamma_trace plan gathers
+    the long rows once and then moves packed segment rows only: no
+    pandas group map, no Window (the long CAR and z-score are gone), no
+    JVM array lambda, and 4 data shuffles — the gather, the CAR group,
+    the stage-B group and the tail's sort — plus the `_n_time` aggregate,
+    whose result is broadcast."""
+    from process_nwb_spark import high_gamma_trace, preprocess
+    from process_nwb_spark.synth import generate_synthetic_data, to_long_df
+
+    X = generate_synthetic_data(1.0, 4, 1000.0, seed=0)
+    res = preprocess(to_long_df(spark, X), 1000.0, 500.0, 250.0,
+                     segmented=True)
+    hg = high_gamma_trace(res, 0.25, 250.0)
+    plan = formatted_plan(hg, "simple")
+    for node in ("FlatMapGroupsInPandas", "MapInPandas", "Window",
+                 "lambdafunction"):
+        assert node not in plan, (node, plan)
+    assert count_exchanges(hg) == 5, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert plan.count("FlatMapGroupsInArrow") == 2, plan
+
+
 def test_fact_fact_join_is_sort_merge(spark, qs):
     df = qs["join_sortmerge_large"].fn(spark, SF)
     plan = formatted_plan(df, "simple")

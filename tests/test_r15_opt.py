@@ -44,7 +44,7 @@ class TestDimBroadcastGate:
         # their source footprints — one table under the gate must not
         # sneak a two-table frame through
         c = T(spark, SF_DIR, "customer")
-        sz = core._table_disk_bytes(SF_DIR, "customer")
+        sz = core._table_bytes(SF_DIR, "customer")
         monkeypatch.setenv("SPARK_GRAFT_BCAST_GATE_MB",
                            str(1.5 * sz / (1024 * 1024)))
         core._TABLE_BYTES.clear()
@@ -67,3 +67,40 @@ class TestDimBroadcastGate:
                                    .fn(spark, SF_DIR).collect()))
         assert rows_hinted == rows_unhinted
         core._TABLE_BYTES.clear()
+
+
+def _write_zeros(path: str, n: int) -> None:
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": np.arange(n, dtype=np.int64) % 7}), path,
+                   use_dictionary=False, compression="zstd")
+
+
+def test_table_bytes_reads_uncompressed_size_from_footers(tmp_path):
+    """The gate input is the size before compression: a repetitive
+    PLAIN-encoded column compresses to a few KB on disk but holds 8 bytes
+    a row uncompressed."""
+    _write_zeros(str(tmp_path / "dim.parquet"), 1_000_000)
+    core._TABLE_BYTES.clear()
+    got = core._table_bytes(str(tmp_path), "dim")
+    assert got >= 8_000_000, got
+    assert os.path.getsize(tmp_path / "dim.parquet") * 10 < got
+    assert core._table_bytes(str(tmp_path), "missing") == 0
+    core._TABLE_BYTES.clear()
+
+
+def test_table_bytes_resizes_a_regenerated_table(tmp_path):
+    """A table rewritten at the same path (a new mtime) is re-sized, not
+    served from the cache."""
+    path = str(tmp_path / "dim.parquet")
+    _write_zeros(path, 1000)
+    core._TABLE_BYTES.clear()
+    small = core._table_bytes(str(tmp_path), "dim")
+    _write_zeros(path, 1_000_000)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10 ** 9))
+    big = core._table_bytes(str(tmp_path), "dim")
+    assert big > 100 * small, (small, big)
+    core._TABLE_BYTES.clear()

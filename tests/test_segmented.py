@@ -128,16 +128,18 @@ def test_validation_guards():
 
 
 def test_bounded_group_size(spark, fixture):
-    """No group ever exceeds seg_len + 2*overlap rows — the memory bound."""
+    """No gathered segment ever exceeds seg_len + 2*overlap samples — the
+    memory bound — and every sample lands in its core segment."""
+    from process_nwb_spark.operators.segmented import gather_segments
+
     _, long_df = fixture
     L, V = 2048, 256
-    i = F.col("sample_idx")
-    s0 = F.floor(i / L).cast("bigint")
-    segs = F.filter(F.array(s0 - 1, s0, s0 + 1),
-                    lambda s: (s >= 0) & (i >= s * L - V) & (i < (s + 1) * L + V))
-    counts = (long_df.select("channel", F.explode(segs).alias("seg"))
-              .groupBy("channel", "seg").count().agg(F.max("count")).first()[0])
-    assert counts <= L + 2 * V
+    g = gather_segments(long_df, L, V)
+    counts = g.agg(F.max(F.size("_i"))).first()[0]
+    assert counts == L + 2 * V
+    cores = (g.select("channel", "seg", F.explode("_i").alias("i"))
+             .where(F.floor(F.col("i") / L) == F.col("seg")).count())
+    assert cores == long_df.count()
 
 
 def test_segmented_wavelet_exact_vs_dense_oracle(spark, fixture):
@@ -331,3 +333,173 @@ def test_segmented_misaligned_start_raises(spark):
     out = segmented_resample(df, 500.0, 1000.0, seg_len=1024, overlap=128)
     with pytest.raises(Exception, match="segmented kernel"):
         out.collect()
+
+
+def test_segment_gather_keeps_null_at_its_index(spark):
+    """A NULL sample gathers as NaN at its own sample_idx (as repack.pack
+    does): a bare collect_list would skip it and shift every later sample
+    of the segment one index earlier."""
+    from process_nwb_spark.operators.segmented import segmented_kernel
+
+    X = np.arange(300, dtype=np.float64)[:, None] + 1.0
+    df = to_long_df(spark, X).withColumn(
+        "value", F.when(F.col("sample_idx") == 100, F.lit(None))
+        .otherwise(F.col("value")))
+    got = _collect_dense(segmented_kernel(df, lambda x: x, 128, 32), 1)[:, 0]
+    assert np.isnan(got[100])
+    want = X[:, 0].copy()
+    want[100] = np.nan
+    np.testing.assert_array_equal(got, want)
+
+
+# --- the segmented pipeline on packed segment arrays -----------------------
+
+RATE, INIT, FINAL = 1000.0, 500.0, 250.0
+
+
+def _replay_pipeline(X, seg_len, n_baseline):
+    """NumPy replay of preprocess(segmented=True) + high_gamma_trace at
+    double precision on the pipeline's own segments: stage A per channel,
+    the per-timepoint CAR, stage B per channel, then K.high_gamma.
+    (n_channels, n_out)."""
+    from fractions import Fraction
+
+    from process_nwb_spark.operators.segmented import (resample_exact,
+                                                       snap_overlap)
+    from process_nwb_spark.pipelines import _snap_seg_len
+
+    fr1, fr2 = Fraction(INIT) / Fraction(RATE), Fraction(FINAL) / Fraction(INIT)
+    seg_a, seg_b = _snap_seg_len(seg_len, INIT, RATE), _snap_seg_len(
+        seg_len, FINAL, INIT)
+    ov_a = snap_overlap(min(4096, seg_a // 4), INIT, RATE)
+    ov_b = snap_overlap(min(4096, seg_b // 4), FINAL, INIT)
+    norms = K.dense_kernel_norms(-(-X.shape[0] * fr1.numerator
+                                   // fr1.denominator), INIT)
+
+    def segments(x, fn, L, V, r):
+        out = []
+        for s in range(-(-len(x) // L)):
+            lo, hi = max(0, s * L - V), min(len(x), (s + 1) * L + V)
+            core = min(len(x), (s + 1) * L) - s * L
+            k0 = (s * L - lo) * r.numerator // r.denominator
+            y = np.asarray(fn(x[lo:hi]), dtype=np.float64)
+            out.append(y[k0:k0 - (-core * r.numerator // r.denominator)])
+        return np.concatenate(out)
+
+    def stage_a(x):
+        return K.apply_linenoise_notch(
+            resample_exact(x, INIT, RATE, precision="double"), INIT,
+            precision="double")
+
+    def stage_b(x):
+        Xh = K.wavelet_transform(x[:, None], INIT, precision="double",
+                                 kernel_norms=norms)[0]
+        return resample_exact(np.abs(Xh[:, 0, :]), FINAL, INIT,
+                              precision="double")
+
+    A = np.stack([segments(X[:, c] * 1e6, stage_a, seg_a, ov_a, fr1)
+                  for c in range(X.shape[1])], axis=1)
+    C = K.subtract_car(A, 0.95, precision="double")
+    return np.stack([K.high_gamma(segments(C[:, c], stage_b, seg_b, ov_b,
+                                           fr2).T, n_baseline)
+                     for c in range(C.shape[1])])
+
+
+def _hg_segmented(spark, X, seg_len, baseline_s):
+    from process_nwb_spark import high_gamma_trace, preprocess
+
+    res = preprocess(to_long_df(spark, X), RATE, INIT, FINAL,
+                     precision="double", segmented=True, seg_len=seg_len)
+    pdf = (high_gamma_trace(res, baseline_s, FINAL).toPandas()
+           .sort_values(["channel", "sample_idx"]))
+    n_ch = X.shape[1]
+    assert (pdf.groupby("channel").sample_idx.agg(
+        lambda s: (s.to_numpy() == np.arange(len(s))).all())).all()
+    return pdf.amp.to_numpy().reshape(n_ch, -1)
+
+
+@pytest.mark.parametrize("secs,seg_len,baseline_s,batch", [
+    (8.0, 512, 2.0, None),     # the baseline spans 2+ stage-B segments
+    (0.5, 512, 1.0, None),     # a recording shorter than the baseline
+    (6.0, 512, 1.5, "1"),      # channel state crosses Arrow batches
+], ids=["multi_segment_baseline", "short_recording", "one_row_batches"])
+def test_segmented_high_gamma_matches_numpy_replay(spark, secs, seg_len,
+                                                   baseline_s, batch):
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    X = generate_synthetic_data(secs, 4, RATE, seed=5)
+    if batch:
+        spark.conf.set(conf, batch)
+    try:
+        got = _hg_segmented(spark, X, seg_len, baseline_s)
+    finally:
+        spark.conf.set(conf, old)
+    want = _replay_pipeline(X, seg_len, int(baseline_s * FINAL))
+    assert got.shape == want.shape
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+
+
+def test_segmented_high_gamma_partition_stable(spark):
+    """Bitwise-equal traces at 7 and 64 shuffle partitions: every group
+    map orders its input (by sample_idx, channel, piece start, g0/band)
+    instead of trusting arrival order."""
+    X = generate_synthetic_data(4.0, 4, RATE, seed=6)
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    outs = []
+    try:
+        for n in ("7", "64"):
+            spark.conf.set(conf, n)
+            outs.append(_hg_segmented(spark, X, 512, 0.5))
+    finally:
+        spark.conf.set(conf, old)
+    np.testing.assert_array_equal(outs[0], outs[1])
+
+
+def test_segmented_groups_bounded_independent_of_length(spark):
+    """The largest Arrow group of every segmented stage is
+    O(seg_len x n_channels) and does not grow when the recording doubles:
+    the gather (seg_len + 2 overlap), the CAR (n_channels cores), stage B
+    (one stage-B segment's pieces) and the tail's segment rows."""
+    from process_nwb_spark.operators.segmented import gather_segments
+    from process_nwb_spark.pipelines import _segmented_frames
+
+    def sizes(secs):
+        X = generate_synthetic_data(secs, 4, RATE, seed=7)
+        df = to_long_df(spark, X)
+        f = _segmented_frames(df, RATE, INIT, FINAL, "rat", True, 0.95,
+                              1e6, "double", 512, 4096)
+        g = f["geometry"]
+        total = F.sum(F.size("values")).alias("n")
+        return g, (
+            gather_segments(df, g["seg_a"], g["ov_a"])
+            .agg(F.max(F.size("_i"))).first()[0],
+            f["cores"].groupBy("series_id", "seg").agg(total)
+            .agg(F.max("n")).first()[0],
+            f["pieces"].groupBy("series_id", "channel", "seg").agg(total)
+            .agg(F.max("n")).first()[0],
+            f["bands"].agg(F.max(F.size("amp"))).first()[0])
+
+    g, short = sizes(6.0)
+    _, long = sizes(12.0)
+    assert short == long, (short, long)
+    core_a = g["seg_a"] * g["fr1"]
+    assert short[0] <= g["seg_a"] + 2 * g["ov_a"]
+    assert short[1] <= 4 * core_a
+    assert short[2] <= g["seg_b"] + 2 * g["ov_b"]
+    assert short[3] <= g["seg_b"] * g["fr2"]
+
+
+def test_segmented_car_rejects_ragged_channels(spark):
+    """All channels of a (series, segment) CAR group must share one time
+    axis; a channel cut short fails loudly instead of being referenced
+    against a partial average."""
+    from process_nwb_spark import preprocess
+
+    X = generate_synthetic_data(2.0, 3, RATE, seed=8)
+    df = to_long_df(spark, X).where(
+        (F.col("channel") != 2) | (F.col("sample_idx") < 1500))
+    res = preprocess(df, RATE, INIT, FINAL, precision="double",
+                     segmented=True, seg_len=512)
+    with pytest.raises(Exception, match="CAR group"):
+        res.tf.collect()
