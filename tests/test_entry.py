@@ -89,3 +89,12 @@ def test_default_driver_heap_fits_the_machine(monkeypatch):
         monkeypatch.setattr(session.os, "sysconf", lambda k, p=pages: {
             "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": p}[k])
         assert session._default_driver_memory() == want
+
+
+def test_driver_jvm_runs_the_parallel_collector(spark):
+    """get_spark's default JVM options reach the driver: G1's resident
+    size followed its GC timing and varied by a quarter between identical
+    runs, the parallel collector's stays within a few percent."""
+    beans = spark._jvm.java.lang.management.ManagementFactory \
+        .getGarbageCollectorMXBeans()
+    assert {b.getName() for b in beans} == {"PS Scavenge", "PS MarkSweep"}
