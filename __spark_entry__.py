@@ -22,20 +22,11 @@ _SMOKE_DIR = "/root/testdata/sf0.001"
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply engine session confs the driver's plain SparkSession lacks."""
-    for k, v in [
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # AQE inside cached-plan builds (see session.py for the r15
-        # cold-JVM adjudication; env override keeps it parameterised)
-        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-         "false" if os.environ.get("SPARK_GRAFT_CACHED_PLAN_AQE",
-                                   "1") == "0" else "true"),
-        # engine semantics are non-ANSI (session.py); Spark 4 defaults ANSI on
-        ("spark.sql.ansi.enabled", "false"),
-    ]:
+    """Apply the engine's session confs (session.ENGINE_CONFS, one shuffle
+    partition per core) to the driver's plain SparkSession."""
+    from process_nwb_spark.session import engine_confs
+
+    for k, v in engine_confs(spark.sparkContext.defaultParallelism).items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -360,9 +360,9 @@ def bench_signal_numpy_reference() -> float:
 
 
 def _timed_noop(df) -> float:
-    t0 = time.time()
+    t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+    return time.perf_counter() - t0
 
 
 def _drop_resident_rdds(spark) -> None:
@@ -389,11 +389,46 @@ def _timed_face(registry, name, spark, data_dir) -> float:
     WHOLE_CALLABLE faces: construction + action under ONE clock,
     because their iterative rounds execute eagerly inside fn()."""
     if name in WHOLE_CALLABLE:
-        t0 = time.time()
+        t0 = time.perf_counter()
         registry[name].fn(spark, data_dir).write.format(
             "noop").mode("overwrite").save()
-        return time.time() - t0
+        return time.perf_counter() - t0
     return _timed_noop(registry[name].fn(spark, data_dir))
+
+
+def bench_session(app_name: str = "bench"):
+    """The headline's session: get_spark with the bench's JVM options."""
+    from process_nwb_spark.session import get_spark
+
+    # -Xlog:disable: JVM unified-logging warnings (e.g. '[gc,alloc] ...
+    # Retried waiting for GCLocker', seen under the n=64 curve's memory
+    # pressure) print to STDOUT and would corrupt the one-JSON-line
+    # contract this harness has with its caller
+    return get_spark(app_name, **{
+        "spark.driver.extraJavaOptions": "-Xlog:disable",
+        # single-JVM local mode: driver heap IS executor memory. The
+        # session default (24g) OOMed mid-curve at n=128 once the
+        # headline loop grew to 5 interleaved passes (r9) — the curve's
+        # big DSP jobs ran against a heap already carrying the longer
+        # run's residue. 32g clears it. NOT more: heap size changes the
+        # GC profile of the allocation-heavy faces — graph_triangles at
+        # sf1 measured 33 s warm @24g/@32g but 58 s @56g and 43 s @40g
+        # (bigger G1 young gen, longer mixed pauses under the wedge
+        # join's churn), and the first 56g window recorded a bogus 133 s
+        # in BENCH_SCALING. 32g is the smallest heap that survives the
+        # whole run, keeping the 24g-calibrated round-over-round series
+        # comparable.
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_BENCH_DRIVER_MEM", "32g")})
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the session (executor threads, codegen, parquet reader paths)
+    so the first timed face doesn't absorb one-time JVM startup cost. No
+    per-face warm pass: the first interleaved pass is cold, as in the
+    driver's run."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{sf_dir}/nation.parquet").collect()
 
 
 def bench_sf1(spark, registry, sf_dir: str,
@@ -1077,29 +1112,9 @@ def main():
     except ValueError:
         sf = -1.0   # unparseable dir name: record the sentinel, still run
 
-    from process_nwb_spark.session import get_spark
     from process_nwb_spark.relational.core import all_queries
 
-    # -Xlog:disable: JVM unified-logging warnings (e.g. '[gc,alloc] ...
-    # Retried waiting for GCLocker', seen under the n=64 curve's memory
-    # pressure) print to STDOUT and would corrupt the one-JSON-line
-    # contract this harness has with its caller
-    spark = get_spark("bench", **{
-        "spark.driver.extraJavaOptions": "-Xlog:disable",
-        # single-JVM local mode: driver heap IS executor memory. The
-        # session default (24g) OOMed mid-curve at n=128 once the
-        # headline loop grew to 5 interleaved passes (r9) — the curve's
-        # big DSP jobs ran against a heap already carrying the longer
-        # run's residue. 32g clears it. NOT more: heap size changes the
-        # GC profile of the allocation-heavy faces — graph_triangles at
-        # sf1 measured 33 s warm @24g/@32g but 58 s @56g and 43 s @40g
-        # (bigger G1 young gen, longer mixed pauses under the wedge
-        # join's churn), and the first 56g window recorded a bogus 133 s
-        # in BENCH_SCALING. 32g is the smallest heap that survives the
-        # whole run, keeping the 24g-calibrated round-over-round series
-        # comparable.
-        "spark.driver.memory": os.environ.get(
-            "SPARK_GRAFT_BENCH_DRIVER_MEM", "32g")})
+    spark = bench_session()
     registry = all_queries()
 
     # test/debug hook: time only the named faces (the harness test runs
@@ -1110,10 +1125,7 @@ def main():
     if q_env.strip():
         headline_faces = [q.strip() for q in q_env.split(",") if q.strip()]
 
-    # warm the session (executor threads, codegen, parquet reader paths)
-    # so the first timed query doesn't absorb one-time JVM startup cost
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/nation.parquet").collect()
+    warm_session(spark, sf_dir)
 
     # MEDIAN-of-N is the headline (r9): single runs on this box vary +-40%
     # (and worse) with ambient load, and two consecutive rounds' "headline
@@ -1136,10 +1148,7 @@ def main():
 
     for _ in range(runs):
         for name in headline_faces:
-            df = registry[name].fn(spark, sf_dir)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.time() - t0)
+            samples[name].append(_timed_face(registry, name, spark, sf_dir))
             # each face pays for (and then releases) its own persists:
             # a resident cache from face A must not evict face B's
             clear_persist_slots()

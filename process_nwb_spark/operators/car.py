@@ -65,9 +65,13 @@ def _trimmed_mean_of_collected(collected: Column, mean_frac: float) -> Column:
     def tm(arr: Column) -> Column:
         n = F.size(arr)
         n_excl = F.ceil(n * (1.0 - mean_frac) / 2.0).cast("int")
-        mid = F.slice(arr, n_excl + 1,
-                      F.greatest(n - 2 * n_excl, F.lit(0)))
-        return _nan_skipping_mean(mid)
+        n_kept = n - 2 * n_excl
+        mid = F.slice(arr, n_excl + 1, F.greatest(n_kept, F.lit(0)))
+        # the reference's guard (common_referencing.py:38-39), per row
+        return F.when(n_kept > 0, _nan_skipping_mean(mid)).otherwise(
+            F.raise_error(F.concat(
+                F.lit(f"mean_frac={mean_frac} excludes all "),
+                n.cast("string"), F.lit(" channels"))))
 
     return F.transform(F.array(F.array_sort(collected)), tm)[0]
 
@@ -83,10 +87,11 @@ def car_column(mean_frac: float = 0.95, value_col: str = "value",
                n_channels: int | None = None) -> Column:
     """The CAR as a window expression over (series_id, sample_idx).
 
-    If `n_channels` is given, the exclusion-count guard is checked eagerly
-    on the driver (mirrors common_referencing.py:38-39); without it the
-    guard cannot raise per-row in Catalyst, and an all-excluded timepoint
-    yields NaN (np.nanmean-of-empty semantics) rather than NULL.
+    The exclusion-count guard (common_referencing.py:38-39) raises when
+    `mean_frac` trims every channel: eagerly on the driver if
+    `n_channels` is given, else at run time from inside the expression.
+    A timepoint whose channels are all NaN yields NaN (np.nanmean-of-empty
+    semantics), not NULL.
     """
     w = Window.partitionBy("series_id", "sample_idx")
     if mean_frac == 1.0:

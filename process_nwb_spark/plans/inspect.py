@@ -21,10 +21,59 @@ def formatted_plan(df: DataFrame, mode: str = "formatted") -> str:
     return jqe.explainString(jmode)
 
 
+# The plan-node table: counter key -> physical node names. The registry
+# audit (node_counts, scripts/audit_plans.py) and the count_exchanges /
+# has_broadcast_join pins count the same nodes. A name matches as a whole
+# word, so "Exchange" does not match inside BroadcastExchange or
+# ReusedExchange, nor "Sort" inside SortAggregate or SortMergeJoin.
+PLAN_NODES: dict[str, tuple[str, ...]] = {
+    "exchange": ("Exchange",),               # shuffles, broadcasts excluded
+    "bcast_exchange": ("BroadcastExchange",),
+    "sort": ("Sort",),                       # SMJ sides, SortAggregate feeds
+    "sort_agg": ("SortAggregate",),          # array/struct agg buffers
+    "window": ("Window", "WindowGroupLimit"),
+    "py_eval": ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "FlatMapGroupsInPandas", "ApplyInPandasWithState",
+                "MapInArrow"),
+    # row-at-a-time Python UDFs alone, so "no BatchEvalPython anywhere in
+    # the registry" is a checkable audit figure
+    "py_row_eval": ("BatchEvalPython",),
+    "nlj_or_cartesian": ("CartesianProduct", "BroadcastNestedLoopJoin"),
+    "generate": ("Generate",),               # explode fan-outs
+    "smj": ("SortMergeJoin",),
+    "bhj": ("BroadcastHashJoin",),
+    "shj": ("ShuffledHashJoin",),
+}
+
+# A Window whose partition list is empty: a single task at scale unless
+# its input is already metadata-sized. Read from the detail blocks, where
+# the arguments are "[<window exprs>], [], [<order>]".
+_GLOBAL_WINDOW = re.compile(
+    r"Arguments: \[[^\]]*windowspecdefinition[^\n]*\], \[\](?:, \[[^\]]*\])?")
+
+
+def _count(plan: str, names: tuple[str, ...]) -> int:
+    return len(re.findall(r"\b(?:%s)\b" % "|".join(names), plan))
+
+
+def node_counts(df: DataFrame) -> dict[str, int]:
+    """PLAN_NODES counts plus `global_window` for one DataFrame's plan.
+
+    Counted on the node lines of the formatted plan's main tree (one line
+    per node, before the first detail block), so argument text such as a
+    lambda that mentions "sort" cannot inflate a count."""
+    txt = formatted_plan(df)
+    tree_end = txt.find("\n\n(1) ")
+    tree = txt[:tree_end] if tree_end > 0 else txt
+    out = {k: _count(tree, names) for k, names in PLAN_NODES.items()}
+    out["global_window"] = len(_GLOBAL_WINDOW.findall(txt))
+    return out
+
+
 def count_exchanges(df: DataFrame,
                     include_single_partition: bool = True) -> int:
-    """Number of shuffle boundaries (Exchange operators, excluding reuse
-    and broadcast exchanges — those don't repartition the big side).
+    """Number of shuffle boundaries: PLAN_NODES' "exchange" nodes in the
+    simple plan, which also prints subqueries and cached plans inline.
 
     Counts `Exchange SinglePartition` too (the all-data-to-one-task funnel
     — the WORST shuffle at scale; an earlier version silently ignored it,
@@ -32,11 +81,9 @@ def count_exchanges(df: DataFrame,
     it exists to catch). Pass include_single_partition=False only when a
     plan legitimately ends in a bounded global rollup that the assertion
     doesn't mean to count."""
-    plan = formatted_plan(df, "simple")
-    n = len(re.findall(r"\bExchange hashpartitioning|\bExchange rangepartitioning|"
-                       r"\bExchange RoundRobinPartitioning", plan))
-    if include_single_partition:
-        n += len(re.findall(r"\bExchange SinglePartition", plan))
+    n = _count(formatted_plan(df, "simple"), PLAN_NODES["exchange"])
+    if not include_single_partition:
+        n -= count_single_partition_exchanges(df)
     return n
 
 
@@ -48,8 +95,9 @@ def count_single_partition_exchanges(df: DataFrame) -> int:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df, "simple") or \
-        "BroadcastNestedLoopJoin" in formatted_plan(df, "simple")
+    """A BroadcastHashJoin or a BroadcastNestedLoopJoin in the plan."""
+    return _count(formatted_plan(df, "simple"),
+                  PLAN_NODES["bhj"] + ("BroadcastNestedLoopJoin",)) > 0
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -70,6 +118,9 @@ def read_schemas(df: DataFrame) -> list[str]:
 
 
 def count_scans(df: DataFrame, source: str = "parquet") -> int:
+    """Scans of one source. Matched as a substring, so the simple plan's
+    "FileScan parquet" counts; a scan has no PLAN_NODES row because the
+    source is a parameter."""
     plan = formatted_plan(df, "simple")
     return len(re.findall(rf"Scan {source}", plan))
 

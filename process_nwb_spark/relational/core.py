@@ -163,6 +163,21 @@ def clear_persist_slots() -> None:
             pass
 
 
+def scratch_dir(kind: str) -> str:
+    """A new directory for a face that writes data and returns a DataFrame
+    reading it back lazily. Unique per call, so two builds made before one
+    action cannot overwrite each other's files; removed at interpreter
+    exit, once no DataFrame can read it any more. The name is [a-z0-9_]
+    after the prefix, so it also works as a table name."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=f"pnwb_spark_{kind}_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     for t in TABLES:
         T(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -10,13 +10,11 @@ core §2C entries at 100 TB.
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .core import T, query
+from .core import T, query, scratch_dir
 
 
 # --------------------------------------------------------------------------
@@ -159,8 +157,7 @@ _ROUNDTRIP_ORACLE = """
         "CSV/JSON entries in sources_queries.py)",
 )
 def source_orc_roundtrip(spark, sf_dir):
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(tempfile.gettempdir(), f"pnwb_spark_roundtrip_orc_{tag}")
+    out = scratch_dir("roundtrip_orc")
     (T(spark, sf_dir, "documents")
      .select("doc_id", "lang", "source", "n_chars")
      .coalesce(1)
@@ -299,8 +296,7 @@ def agg_hll_sketch(spark, sf_dir):
         "inputs",
 )
 def source_xml_roundtrip(spark, sf_dir):
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(tempfile.gettempdir(), f"pnwb_spark_roundtrip_xml_{tag}")
+    out = scratch_dir("roundtrip_xml")
     (T(spark, sf_dir, "documents")
      .select("doc_id", "lang", "source", "n_chars")
      .coalesce(1)
@@ -473,8 +469,7 @@ def join_null_safe(spark, sf_dir):
         "the coarse always-filtered column, bucket/sort within",
 )
 def sink_partitioned_prune(spark, sf_dir):
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(tempfile.gettempdir(), f"pnwb_spark_part_lang_{tag}")
+    out = scratch_dir("part_lang")
     (T(spark, sf_dir, "documents")
      .select("doc_id", "source", "n_chars", "lang")
      .write.mode("overwrite").partitionBy("lang").parquet(out))
@@ -516,10 +511,9 @@ _N_BUCKETS = 8
         "result-invariant, which is what the hash match proves",
 )
 def join_bucketed_colocated(spark, sf_dir):
-    # table identifiers allow only [A-Za-z0-9_]; sanitize EVERY other
-    # character (a '-' or '.' in sf_dir would otherwise break saveAsTable)
-    tag = re.sub(r"[^0-9a-zA-Z_]", "_", sf_dir.strip("/"))
-    base = os.path.join(tempfile.gettempdir(), f"pnwb_spark_bucketed_{tag}")
+    # unique table names per call, from the scratch directory's name
+    base = scratch_dir("bucketed")
+    tag = os.path.basename(base)
     specs = [
         (f"pnwb_bkt_orders_{tag}",
          T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice"),

@@ -4,18 +4,18 @@
 the text source, aggregate — the oracle replays the aggregate on the
 original parquet, so a lossy round-trip would hash-mismatch).
 
-Round-trip scratch space is /tmp (driver-local). At scale the same
-write/read is a distributed partitioned write — the queries here pin
-a single output partition only to keep the smoke-sized round-trip cheap.
+Round-trip scratch space is a new driver-local temp directory per call
+(core.scratch_dir). At scale the same write/read is a distributed
+partitioned write — the queries here pin a single output partition only
+to keep the smoke-sized round-trip cheap.
 """
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from .core import T, query
+from .core import T, query, scratch_dir
 
 
 @query(
@@ -68,12 +68,6 @@ def agg_percentiles(spark, sf_dir):
     )
 
 
-def _scratch(sf_dir: str, fmt: str) -> str:
-    tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(tempfile.gettempdir(),
-                        f"pnwb_spark_roundtrip_{fmt}_{tag}")
-
-
 _ROUNDTRIP_ORACLE = """
     SELECT lang, source,
            COUNT(*) AS n_docs,
@@ -101,7 +95,7 @@ def _roundtrip_agg(df):
         "the round-trip is lossless",
 )
 def source_csv_roundtrip(spark, sf_dir):
-    out = _scratch(sf_dir, "csv")
+    out = scratch_dir("roundtrip_csv")
     (T(spark, sf_dir, "documents")
      .select("doc_id", "lang", "source", "n_chars")
      .coalesce(1)
@@ -118,7 +112,7 @@ def source_csv_roundtrip(spark, sf_dir):
         "(schema given explicitly; inference would widen types)",
 )
 def source_json_roundtrip(spark, sf_dir):
-    out = _scratch(sf_dir, "json")
+    out = scratch_dir("roundtrip_json")
     (T(spark, sf_dir, "documents")
      .select("doc_id", "lang", "source", "n_chars")
      .coalesce(1)
@@ -187,7 +181,7 @@ def source_file_lineage(spark, sf_dir):
         "backfill progress monitor",
 )
 def source_schema_evolution(spark, sf_dir):
-    out = _scratch(sf_dir, "evolve")
+    out = scratch_dir("roundtrip_evolve")
     d = T(spark, sf_dir, "documents")
     (d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang")
      .write.mode("overwrite").parquet(os.path.join(out, "gen=1")))

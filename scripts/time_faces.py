@@ -1,14 +1,15 @@
-"""Time individual registry faces in isolation (optimization-round harness).
+"""Time named registry faces on the bench headline's basis.
 
 Usage: python scripts/time_faces.py <name> [name ...]
-  SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  TIME_FACES_PASSES    passes per face (default 5; min + median reported)
+  SPARK_GRAFT_SF_DIR      input dir (default: bench.py's, the sf0.1 tables)
+  SPARK_GRAFT_BENCH_RUNS  interleaved passes (default 5)
 
-Methodology = the bench's (guide §1.4): each pass builds the face from the
-registry callable and drives it through the noop sink, so build-time eager
-actions (localCheckpoint rounds in the graph tier) are inside the timed
-region exactly as bench.py times them; persist slots are cleared between
-passes so min-of-N is never flattered by a warm cache.
+Replicates bench.py's headline loop as the driver runs it: one fresh JVM
+on bench's session, its generic warm-up only (no per-face warm pass), then
+N interleaved passes over the faces, each timed by bench._timed_face with
+clear_persist_slots() between faces. Prints one JSON line:
+{name: {"median", "min", "all"}}. Each invocation is one cold sample, so
+A/Bs alternate invocations rather than compare within one session.
 """
 from __future__ import annotations
 
@@ -16,42 +17,35 @@ import json
 import os
 import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
     names = sys.argv[1:]
+    if not names:
+        sys.exit(__doc__)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    passes = int(os.environ.get("TIME_FACES_PASSES", "5"))
+    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
 
-    from process_nwb_spark.session import get_spark
+    import bench
     from process_nwb_spark.relational.core import (all_queries,
                                                    clear_persist_slots)
 
-    spark = get_spark("time-faces")
+    spark = bench.bench_session("time-faces")
     registry = all_queries()
-    out = {}
-    for name in names:
-        fn = registry[name].fn
-        # one untimed warmup so JIT/scan-cache states match the bench's
-        # steady state (bench interleaves passes; first-touch is excluded
-        # by min-of-N there too)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        clear_persist_slots()
-        ts = []
-        for _ in range(passes):
-            t0 = time.monotonic()
-            spark.sparkContext.setJobDescription(f"time:{name}")
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.monotonic() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+    bench.warm_session(spark, sf_dir)
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    for _ in range(runs):
+        for name in names:
+            samples[name].append(
+                bench._timed_face(registry, name, spark, sf_dir))
             clear_persist_slots()
-        out[name] = {"min": min(ts), "median": statistics.median(ts),
-                     "all": ts}
-        print(json.dumps({name: out[name]}), flush=True)
-    print(json.dumps(out))
+    print(json.dumps({n: {"median": round(statistics.median(v), 3),
+                          "min": round(min(v), 3),
+                          "all": [round(x, 3) for x in v]}
+                      for n, v in samples.items()}))
     spark.stop()
 
 

@@ -98,3 +98,34 @@ def test_driver_jvm_runs_the_parallel_collector(spark):
     beans = spark._jvm.java.lang.management.ManagementFactory \
         .getGarbageCollectorMXBeans()
     assert {b.getName() for b in beans} == {"PS Scavenge", "PS MarkSweep"}
+
+
+def test_driver_session_confs_match_get_spark(spark, monkeypatch):
+    """The driver hands entry()/queries() a plain session. Once
+    _configure has run, every engine conf reads as in a get_spark session
+    on the same cores, in default and in ANSI mode, so the oracle gates
+    certify the engine the driver runs."""
+    from process_nwb_spark.session import engine_confs, get_spark
+
+    n = spark.sparkContext.defaultParallelism
+    keys = list(engine_confs(n))
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for ansi in (None, "1"):
+            if ansi is None:
+                monkeypatch.delenv("SPARK_GRAFT_ANSI", raising=False)
+            else:
+                monkeypatch.setenv("SPARK_GRAFT_ANSI", ansi)
+            # an existing session takes the builder's confs at runtime
+            get_spark("pytest", master=f"local[{n}]", shuffle_partitions=n)
+            want = {k: spark.conf.get(k) for k in keys}
+            assert want["spark.sql.ansi.enabled"] == (
+                "true" if ansi else "false")
+            for k in keys:          # back to a plain session's defaults
+                spark.conf.unset(k)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+            entry._configure(spark)
+            assert {k: spark.conf.get(k) for k in keys} == want
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -14,6 +14,7 @@ from process_nwb_spark.synth import generate_synthetic_data, to_long_df
 
 import copy_strip
 import preprocess_folder
+from conftest import SF_SMOKE
 
 
 @pytest.fixture()
@@ -114,3 +115,46 @@ def test_copy_strip_handles_bucketed_form(tmp_path):
     dropped = copy_strip.main([str(src)])
     assert sorted(dropped) == ["_bucketed_wvlt_amp_ECoG", "wvlt_amp_ECoG"]
     assert sorted(os.listdir(src)) == ["ECoG_raw", "_bucketed_ECoG_raw"]
+
+
+def _run_script(args, **env):
+    """Run a script in its own interpreter and JVM, as from a shell."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_BENCH_DRIVER_MEM="1g",
+               SPARK_GRAFT_SF_DIR=SF_SMOKE, **env)
+    r = subprocess.run([sys.executable, *args], cwd=repo, env=env,
+                       stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                       text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    return r.stdout
+
+
+def test_time_faces_prints_median_min_all():
+    import json
+
+    out = _run_script(["scripts/time_faces.py", "agg_pricing_summary"],
+                      SPARK_GRAFT_BENCH_RUNS="2")
+    rec = json.loads(out.strip().splitlines()[-1])
+    assert list(rec) == ["agg_pricing_summary"]
+    t = rec["agg_pricing_summary"]
+    assert set(t) == {"median", "min", "all"}
+    assert len(t["all"]) == 2 and t["min"] == min(t["all"]) > 0
+
+
+def test_audit_plans_writes_plan_node_counts(tmp_path):
+    import json
+
+    from process_nwb_spark.plans.inspect import PLAN_NODES
+
+    _run_script(["scripts/audit_plans.py", str(tmp_path / "audit"),
+                 "agg_pricing_summary", "join_inner_broadcast"])
+    with open(tmp_path / "audit" / "AUDIT.json") as f:
+        faces = json.load(f)["faces"]
+    assert set(faces) == {"agg_pricing_summary", "join_inner_broadcast"}
+    for counts in faces.values():
+        assert set(counts) == set(PLAN_NODES) | {"global_window"}
+    assert faces["agg_pricing_summary"]["exchange"] >= 1
+    assert faces["join_inner_broadcast"]["bhj"] >= 1

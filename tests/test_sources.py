@@ -99,6 +99,46 @@ def test_bucketed_join_no_shuffle(spark, catalog):
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
+def test_scratch_faces_built_concurrently_read_their_own_files(spark):
+    """Scratch-writing faces write at build time and return a DataFrame
+    that reads the files back lazily. Two threads each build two such
+    faces before either runs an action; each call writes to its own
+    directory (and the bucketed face to its own tables), so every result
+    is still correct."""
+    import os
+    import threading
+
+    from conftest import SF_SMOKE as SFD
+    from process_nwb_spark.relational.core import all_queries, scratch_dir
+
+    reg = all_queries()
+    faces = ("source_csv_roundtrip", "join_bucketed_colocated")
+    want = {f: sorted(reg[f].fn(spark, SFD).collect()) for f in faces}
+    barrier = threading.Barrier(2, timeout=300)
+    got: dict[int, dict] = {}
+    errors: list[Exception] = []
+
+    def run(tid: int) -> None:
+        try:
+            dfs = {f: reg[f].fn(spark, SFD) for f in faces}
+            barrier.wait()      # both threads have written; now read back
+            got[tid] = {f: sorted(df.collect()) for f, df in dfs.items()}
+        except Exception as e:       # surfaced by the asserts below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert not errors, errors
+    assert got[0] == got[1] == want
+    a, b = scratch_dir("probe"), scratch_dir("probe")
+    assert a != b and os.path.isdir(a) and os.path.isdir(b)
+
+
 # ---------------------------------------------------------------------------
 # Custom Python DataSource (ecog_synth)
 # ---------------------------------------------------------------------------

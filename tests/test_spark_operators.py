@@ -107,6 +107,26 @@ def test_car_df_nan_skipping(spark, dense):
     np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
 
 
+def test_car_without_n_channels_raises_when_all_trimmed(spark, dense):
+    """With no `n_channels`, a mean_frac that trims every channel (2 at
+    0.95: one excluded per side) fails the job, as the reference and the
+    packed kernel do, instead of returning a NaN reference. Three
+    channels keep one and still match the kernel."""
+    two = to_long_df(spark, dense[:, :2])
+    with pytest.raises(Exception, match="excludes all 2 channels"):
+        subtract_car(two, mean_frac=0.95).collect()
+    with pytest.raises(Exception, match="excludes all 2 channels"):
+        car_df(two, mean_frac=0.95).collect()
+    with pytest.raises(ValueError):
+        K.subtract_car(dense[:, :2], 0.95)
+    X = dense[:, :3].copy()
+    X[5, :] = np.nan                 # an all-NaN timepoint keeps its NaN
+    got = long_to_dense(subtract_car(to_long_df(spark, X), mean_frac=0.95))
+    want = K.subtract_car(X, 0.95, precision="double")
+    assert np.isnan(got[5]).all()
+    np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
+
+
 def test_wavelet_op_matches_kernel(spark, signals, dense):
     wv = wavelet_op(pack(signals), RATE, filters="rat", hg_only=True,
                     abs_only=False, precision="double")

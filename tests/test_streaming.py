@@ -194,7 +194,9 @@ def test_stream_preprocess_full_pipeline(spark, tmp_path):
     from process_nwb_spark.streaming.ops import stream_preprocess_full
     from process_nwb_spark.synth import generate_synthetic_data, to_long_df
 
-    X = generate_synthetic_data(4.0, 2, 2000.0, seed=7)  # 8000 x 2
+    # 3 channels: the default mean_frac=0.95 trims one per side, so 2
+    # channels would leave none and the CAR raises
+    X = generate_synthetic_data(4.0, 3, 2000.0, seed=7)  # 8000 x 3
     long_df = to_long_df(spark, X)
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     cuts = [(0, 4096), (4096, 8000)]
@@ -222,7 +224,8 @@ def test_stream_preprocess_full_pipeline(spark, tmp_path):
                                            overlap=512, precision="double")
                      .toPandas())
     want = pd.concat(parts).sort_values(["channel", "band", "sample_idx"])
-    assert len(got) == len(want) == 8000 * 2 * 6
+    assert len(got) == len(want) == 8000 * 3 * 6
+    assert not np.isnan(got.amp.to_numpy()).any()
     np.testing.assert_allclose(got.amp.to_numpy(), want.amp.to_numpy(),
                                rtol=1e-9)
 
