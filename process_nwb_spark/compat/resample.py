@@ -46,6 +46,6 @@ def store_resample(elec_series, processing, new_freq, axis=0, scaling=None,
     """NWB store path (resample.py:156-205) — env-gated."""
     require_pynwb(
         "store_resample",
-        "operators.kernel_ops.scale_packed + resample_op, persisted with "
+        "pipelines.preprocess(...).stages['downsampled'], persisted with "
         "sources.catalog.SignalCatalog under the 'downsampled_' lineage "
         "name")

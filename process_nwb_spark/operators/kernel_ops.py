@@ -256,7 +256,8 @@ def _car_group_map(df: DataFrame, emit, schema: str, mean_frac: float,
 def fused_ops_arrow(df: DataFrame, *fns) -> DataFrame:
     """Chain ndarray->ndarray kernels in ONE Python crossing (the Spark
     analog of the reference's fused notch+CAR stage pipelines.py:114-173 —
-    here used for resample+notch, which are adjacent per-channel stages)."""
+    here used for scale+resample+notch, which are adjacent per-channel
+    stages)."""
 
     def chained(x):
         for f in fns:

@@ -52,9 +52,10 @@ def band_mean(tf: DataFrame, value_col: str = "amp") -> DataFrame:
 def high_gamma_packed(wv: DataFrame, n_baseline: int,
                       values_col: str = "amp") -> DataFrame:
     """zscore_baseline + band_mean on PACKED band rows (series_id, channel,
-    band, amp ARRAY), e.g. a fuse=False result: one applyInArrow group per
-    channel runs K.high_gamma, the fused pipeline's own tail, on its bands
-    in band order; the long explode happens once, on the trace."""
+    band, amp ARRAY), e.g. a PreprocessResult's `tf_packed`: one
+    applyInArrow group per channel runs K.high_gamma, the pipeline's own
+    tail, on its bands in band order; the long explode happens once, on
+    the trace."""
     nb = int(n_baseline)
 
     def fn(table):

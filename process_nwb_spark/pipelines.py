@@ -22,10 +22,10 @@ Physical plan (2 shuffles on the packed layout — SURVEY.md §3, improved):
 `high_gamma_trace` swaps the band emitter for the high-gamma one (baseline
 z-score + band mean in NumPy, one row per channel) and unpacks that: the
 tutorial's tail adds no shuffle. Both kernel crossings are Arrow-native
-(operators/kernel_ops.py). With
-`fuse=False` the original 3-shuffle relational-CAR plan runs instead (it
-materializes the long intermediates the `all_steps` catalog needs) on the
-same Arrow row map.
+(operators/kernel_ops.py). The x1e6 scale is the row map's first function.
+This is the only whole-channel plan: the `downsampled` lineage stage is
+the same row map stopped after the resample, built lazily, so it costs
+nothing unless `all_steps` stores it.
 """
 from __future__ import annotations
 
@@ -37,13 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dsp import kernels as K
-from .operators.car import subtract_car, subtract_car_packed
+from .operators.car import subtract_car_packed
 from .operators.kernel_ops import (car_high_gamma_arrow, car_wavelet_arrow,
-                                   fused_ops_arrow, notch_op, resample_op,
-                                   scale_packed, wavelet_op)
+                                   fused_ops_arrow)
 from .operators.repack import pack, unpack
-from .operators.zscore import (band_mean, high_gamma_packed,
-                               high_gamma_segments, zscore_baseline)
+from .operators.zscore import high_gamma_segments
 
 SCALING = 1e6  # V -> uV, resample.py:11
 
@@ -52,11 +50,11 @@ SCALING = 1e6  # V -> uV, resample.py:11
 class PreprocessResult:
     """Lazily-composed stage DataFrames, lineage-named like the reference."""
     tf: DataFrame                       # long (series_id, channel, band, cf, sd, sample_idx, amp)
+    # n_baseline -> packed high-gamma rows (series_id, channel, values
+    # ARRAY, plus `g0` on the segmented path)
+    high_gamma: Callable[[int], DataFrame]
     stages: dict = field(default_factory=dict)
     tf_packed: DataFrame | None = None  # (series_id, channel, band, cf, sd, amp ARRAY)
-    # n_baseline -> packed high-gamma rows (series_id, channel, values
-    # ARRAY), built from the CAR input; set by the fused pipeline only
-    high_gamma: Callable[[int], DataFrame] | None = None
 
     def materialize(self, spark, base_name: str = "ECoG"):
         """`all_steps` analog: register every stage as a temp view with the
@@ -72,7 +70,6 @@ def preprocess(signals: DataFrame, rate: float,
                filters: str = "rat", hg_only: bool = True,
                mean_frac: float = 0.95, scaling: float = SCALING,
                abs_only: bool = True, precision: str = "single",
-               fuse: bool = True,
                segmented: bool = False, seg_len: int | None = None,
                seg_overlap: int = 4096) -> PreprocessResult:
     """The default pipeline on a long signals DataFrame
@@ -102,62 +99,42 @@ def preprocess(signals: DataFrame, rate: float,
             raise ValueError(
                 "segmented preprocess always post-resamples, which is "
                 "incompatible with phase output; use abs_only=True")
-        if not fuse:
-            # fuse=False exists to materialize the unfused 'downsampled'
-            # lineage stage, which the segmented plan never produces —
-            # failing loudly beats a downstream KeyError on res.stages
-            raise ValueError(
-                "segmented preprocess does not materialize the unfused "
-                "(fuse=False) lineage stages; run fuse=True, or run the "
-                "whole-channel path for --all_steps-style lineage")
         return _preprocess_segmented(
             signals, rate, initial_resample_rate, final_resample_rate,
             filters=filters, hg_only=hg_only, mean_frac=mean_frac,
             scaling=scaling, precision=precision, seg_len=seg_len,
             seg_overlap=seg_overlap)
-    stages: dict[str, DataFrame] = {}
-
     packed = pack(signals)
-    packed = scale_packed(packed, scaling)
-    if fuse:
-        ds = fused_ops_arrow(
-            packed,
-            lambda x: K.resample(x, initial_resample_rate, rate,
-                                 precision=precision),
-            lambda x: K.apply_linenoise_notch(x, initial_resample_rate,
-                                              precision=precision),
-        )
-        # dense CAR on packed rows: shuffle = n_channels array rows/series.
-        # The lineage stage stays separately addressable (lazy — only pays
-        # if materialized); the pipeline output itself uses the fused
-        # CAR->wavelet kernel below (one Python crossing for both).
-        repacked = subtract_car_packed(ds, mean_frac=mean_frac,
-                                       precision=precision)
-        stages["CAR_ln_downsampled"] = unpack(repacked)
-        wv = car_wavelet_arrow(ds, initial_resample_rate,
-                               mean_frac=mean_frac, filters=filters,
-                               hg_only=hg_only, abs_only=abs_only,
-                               post_resample_rate=final_resample_rate,
-                               precision=precision)
-        high_gamma = partial(car_high_gamma_arrow, ds, initial_resample_rate,
-                             mean_frac=mean_frac, filters=filters,
-                             hg_only=hg_only,
-                             post_resample_rate=final_resample_rate,
-                             precision=precision)
-    else:
-        ds = resample_op(packed, initial_resample_rate, rate,
+
+    def scale(x):
+        return x * scaling
+
+    def resample(x):
+        return K.resample(x, initial_resample_rate, rate, precision=precision)
+
+    ds = fused_ops_arrow(
+        packed, scale, resample,
+        lambda x: K.apply_linenoise_notch(x, initial_resample_rate,
+                                          precision=precision))
+    # The lineage stages stay separately addressable (lazy — each pays only
+    # if materialized); the pipeline output itself uses the fused
+    # CAR->wavelet kernel below (one Python crossing for both).
+    stages: dict[str, DataFrame] = {
+        "downsampled": unpack(fused_ops_arrow(packed, scale, resample)),
+        # dense CAR on packed rows: shuffle = n_channels array rows/series
+        "CAR_ln_downsampled": unpack(subtract_car_packed(
+            ds, mean_frac=mean_frac, precision=precision)),
+    }
+    wv = car_wavelet_arrow(ds, initial_resample_rate, mean_frac=mean_frac,
+                           filters=filters, hg_only=hg_only,
+                           abs_only=abs_only,
+                           post_resample_rate=final_resample_rate,
+                           precision=precision)
+    high_gamma = partial(car_high_gamma_arrow, ds, initial_resample_rate,
+                         mean_frac=mean_frac, filters=filters,
+                         hg_only=hg_only,
+                         post_resample_rate=final_resample_rate,
                          precision=precision)
-        stages["downsampled"] = unpack(ds)
-        ds = notch_op(ds, initial_resample_rate, precision=precision)
-        long_ds = unpack(ds)
-        car_ln = subtract_car(long_ds, mean_frac=mean_frac)
-        stages["CAR_ln_downsampled"] = car_ln
-        repacked = pack(car_ln)
-        wv = wavelet_op(repacked, initial_resample_rate, filters=filters,
-                        hg_only=hg_only, abs_only=abs_only,
-                        post_resample_rate=final_resample_rate,
-                        precision=precision)
-        high_gamma = None
     tf = unpack(wv.drop("phase"), values_col="amp", value_col="amp",
                 extra_keys=("band", "cf", "sd"))
     stages["wvlt_amp"] = tf
@@ -169,10 +146,9 @@ def preprocess(signals: DataFrame, rate: float,
         stages["wvlt_phase"] = unpack(
             wv.drop("amp"), values_col="phase", value_col="phase",
             extra_keys=("band", "cf", "sd"))
-    return PreprocessResult(tf=tf, stages=stages,
+    return PreprocessResult(tf=tf, high_gamma=high_gamma, stages=stages,
                             tf_packed=wv if not abs_only
-                            else wv.drop("phase"),
-                            high_gamma=high_gamma)
+                            else wv.drop("phase"))
 
 
 def _snap_seg_len(base: int, new_freq: float, old_freq: float) -> int:
@@ -375,27 +351,16 @@ def high_gamma_trace(result: PreprocessResult, baseline_seconds: float = 0.25,
     """Tutorial tail: z-score against the first `baseline_seconds`, then
     mean over bands (examples/plot_ECoG_preprocessing_tutorial.py:164-167).
 
-    Three paths of one math, picked by what the result carries:
-    - `high_gamma`, from either pipeline, unpacked once:
-      - fused whole-channel: the CAR->wavelet group map emits one
-        high-gamma row per channel — no shuffle of its own
-        (operators/kernel_ops.car_high_gamma_arrow);
-      - segmented: stage B's band rows are sorted by channel and segment
-        start `g0` and streamed through one Arrow map that fixes the
-        baseline stats from the leading segments and z-scores the rest
-        as they pass — one shuffle, memory n_baseline + one segment
-        (operators/zscore.high_gamma_segments); rows carry `g0`;
-    - `tf_packed` only (fuse=False, hand-built results): one Arrow group
-      per channel over the band rows (operators/zscore.high_gamma_packed);
-    - neither: the long window/groupBy formulation (operators/zscore).
-    All but the last run dsp.kernels' high-gamma math."""
-    n_baseline = int(baseline_seconds * final_rate)
-    if result.high_gamma is not None:
-        hg = result.high_gamma(n_baseline)
-        return unpack(hg, value_col="amp",
-                      offset_col="g0" if "g0" in hg.columns else None)
-    if result.tf_packed is not None:
-        return high_gamma_packed(result.tf_packed, n_baseline,
-                                 values_col="amp")
-    z = zscore_baseline(result.tf, n_baseline, value_col="amp")
-    return band_mean(z, value_col="amp")
+    One path for both pipelines: the result's `high_gamma` builds one
+    packed trace row per channel, unpacked once here.
+    - Whole-channel: the CAR->wavelet group map emits it, so the tail
+      adds no shuffle (operators/kernel_ops.car_high_gamma_arrow).
+    - Segmented: stage B's band rows are sorted by channel and segment
+      start `g0` and streamed through one Arrow map that fixes the
+      baseline stats from the leading segments and z-scores the rest as
+      they pass — one shuffle, memory n_baseline + one segment
+      (operators/zscore.high_gamma_segments); rows carry `g0`.
+    Both run dsp.kernels' high-gamma math."""
+    hg = result.high_gamma(int(baseline_seconds * final_rate))
+    return unpack(hg, value_col="amp",
+                  offset_col="g0" if "g0" in hg.columns else None)

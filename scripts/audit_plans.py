@@ -7,7 +7,7 @@ classes of `process_nwb_spark.plans.inspect.PLAN_NODES` plus
 `global_window` (a Window with an empty partition spec).
 
 Usage: python scripts/audit_plans.py <out_dir> [name ...]
-  (default: all faces; e.g. out_dir = plans/r15)
+  (default: all faces; e.g. out_dir = plans/r16)
 Faces whose plan cannot be built (env-gated, streaming-only) record an
 "err" string instead of counts. The JSON is committed so audit claims
 can be checked without running Spark.

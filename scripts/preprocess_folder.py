@@ -57,7 +57,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "rate-ratio denominator). Use when a single "
                         "channel's samples exceed one executor task's "
                         "memory budget — see SCALE.md 'Memory bound'. "
-                        "Incompatible with --all_steps' unfused lineage.")
+                        "Incompatible with --all_steps: the segmented plan "
+                        "has no 'downsampled' stage.")
     return p
 
 
@@ -108,20 +109,18 @@ def main(argv=None, spark=None) -> dict:
     for pdf_ in parts[1:]:
         merged = merged.unionByName(pdf_)
     # --all_steps mirrors the reference's store-everything mode
-    # (pipelines.py:69-80 stores the resampled series too): the unfused
-    # path materializes the 'downsampled' intermediate the fused plan
-    # never surfaces — lineage completeness at the cost of one extra
-    # shuffle, exactly the reference's trade
+    # (pipelines.py:69-80 stores the resampled series too): every lineage
+    # stage of the whole-channel plan is written, 'downsampled' included.
+    # Each stage is lazy, so only a stored one is computed.
     if args.seg_len is not None and args.all_steps:
         raise SystemExit("--seg_len routes through the segmented plan, "
-                         "which does not materialize the unfused "
-                         "--all_steps intermediates; pick one")
+                         "which has no 'downsampled' stage for "
+                         "--all_steps to store; pick one")
     res = preprocess(merged, args.rate,
                      initial_resample_rate=args.initial_resample_rate,
                      final_resample_rate=args.final_resample_rate,
                      filters=args.filters,
                      hg_only=not args.all_filters,
-                     fuse=not args.all_steps,
                      segmented=args.seg_len is not None,
                      seg_len=args.seg_len)
     if not args.all_steps:       # store only the wavelet amplitudes

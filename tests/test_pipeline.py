@@ -5,6 +5,8 @@ import pytest
 
 from process_nwb_spark import high_gamma_trace, preprocess
 from process_nwb_spark.dsp import kernels as K
+from process_nwb_spark.operators.zscore import (band_mean, high_gamma_packed,
+                                                zscore_baseline)
 from process_nwb_spark.synth import generate_synthetic_data, to_long_df
 
 RATE = 2000.0
@@ -40,15 +42,14 @@ def test_preprocess_matches_dense(spark, dense):
                                rtol=1e-7, atol=1e-9)
 
 
-def test_preprocess_unfused_matches_fused(spark, dense):
-    a = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                   precision="double", fuse=True).tf.toPandas()
-    b = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                   precision="double", fuse=False).tf.toPandas()
-    key = ["channel", "band", "sample_idx"]
-    a, b = a.sort_values(key), b.sort_values(key)
-    np.testing.assert_allclose(a.amp.to_numpy(), b.amp.to_numpy(),
-                               rtol=1e-9)
+def test_downsampled_stage_matches_kernel(spark, dense):
+    """The `downsampled` lineage stage (the row map stopped after the
+    scale and resample) against the dense kernel."""
+    got = (preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                      precision="double").stages["downsampled"].toPandas()
+           .sort_values(["sample_idx", "channel"]).value.to_numpy())
+    want = K.resample(dense * 1e6, INIT, RATE, precision="double")
+    np.testing.assert_allclose(got.reshape(want.shape), want, rtol=1e-12)
 
 
 def test_float32_default_within_reference_tolerance(spark, dense):
@@ -175,45 +176,50 @@ def test_assemble_v2_composition(spark):
     out.unpersist()
 
 
-def test_high_gamma_packed_equals_long_formulation(spark, dense):
-    """The packed fast path (array folds + band zip) must match the long
-    window/groupBy formulation numerically — same baseline population std,
-    same band mean; only the physical plan differs."""
-    import numpy as np
-
-    from process_nwb_spark.pipelines import PreprocessResult
-
-    res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                     precision="double")
-    key = ["channel", "sample_idx"]
-    fast = (high_gamma_trace(res, 0.25, FINAL).toPandas()
-            .sort_values(key).reset_index(drop=True))
-    long_only = PreprocessResult(tf=res.tf)   # tf_packed=None -> long path
-    slow = (high_gamma_trace(long_only, 0.25, FINAL).toPandas()
-            .sort_values(key).reset_index(drop=True))
-    assert list(fast.columns) == list(slow.columns) or \
-        set(fast.columns) == set(slow.columns)
-    np.testing.assert_allclose(fast.amp.to_numpy(), slow.amp.to_numpy(),
-                               rtol=1e-9, atol=1e-12)
-
-
 def _hg_sorted(hg):
     return (hg.toPandas().sort_values(["sample_idx", "channel"])
             .amp.to_numpy())
 
 
-@pytest.mark.parametrize("fuse", [True, False], ids=["fused", "unfused"])
-def test_high_gamma_trace_matches_dense(spark, dense, fuse):
-    """Both packed tails — the fused group map's emitter and
-    high_gamma_packed over a fuse=False band table — against the dense
-    kernels followed by a NumPy baseline z-score and band mean."""
+def _hg_tails(res, baseline_seconds):
+    """The pipeline's own tail and high_gamma_packed over its band rows."""
+    return {"fused": high_gamma_trace(res, baseline_seconds, FINAL),
+            "packed": high_gamma_packed(
+                res.tf_packed, int(baseline_seconds * FINAL),
+                values_col="amp")}
+
+
+def _hg_long(res, baseline_seconds):
+    """The long window/groupBy formulation over the band rows."""
+    z = zscore_baseline(res.tf, int(baseline_seconds * FINAL),
+                        value_col="amp")
+    return band_mean(z, value_col="amp")
+
+
+def test_high_gamma_packed_equals_long_formulation(spark, dense):
+    """Both packed tails must match the long window/groupBy formulation
+    numerically — same baseline population std, same band mean; only the
+    physical plan differs."""
     res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                     precision="double", fuse=fuse)
-    assert (res.high_gamma is not None) == fuse
+                     precision="double")
+    slow = _hg_long(res, 0.25)
+    for name, fast in _hg_tails(res, 0.25).items():
+        assert set(fast.columns) == set(slow.columns), name
+        np.testing.assert_allclose(_hg_sorted(fast), _hg_sorted(slow),
+                                   rtol=1e-9, atol=1e-12, err_msg=name)
+
+
+@pytest.mark.parametrize("tail", ["fused", "packed"])
+def test_high_gamma_trace_matches_dense(spark, dense, tail):
+    """Both packed tails — the CAR->wavelet group map's emitter and
+    high_gamma_packed over the band rows — against the dense kernels
+    followed by a NumPy baseline z-score and band mean."""
+    res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                     precision="double")
     amp, _ = _dense_pipeline(dense)                  # (time, ch, band)
     base = amp[:int(0.25 * FINAL)]
     want = ((amp - base.mean(axis=0)) / base.std(axis=0)).mean(axis=2)
-    got = _hg_sorted(high_gamma_trace(res, 0.25, FINAL))
+    got = _hg_sorted(_hg_tails(res, 0.25)[tail])
     np.testing.assert_allclose(got.reshape(want.shape), want,
                                rtol=1e-7, atol=1e-7)
 
@@ -221,18 +227,14 @@ def test_high_gamma_trace_matches_dense(spark, dense, fuse):
 def test_high_gamma_short_recording_uses_real_baseline_length(spark):
     """A recording shorter than the baseline window: both packed tails
     z-score against the samples it has, like the long formulation."""
-    from process_nwb_spark.pipelines import PreprocessResult
-
     X = generate_synthetic_data(0.5, 4, RATE, seed=3)   # 125 final samples
     res = preprocess(to_long_df(spark, X), RATE, INIT, FINAL,
                      precision="double")
-    want = _hg_sorted(high_gamma_trace(PreprocessResult(tf=res.tf), 1.0,
-                                       FINAL))
+    want = _hg_sorted(_hg_long(res, 1.0))
     assert len(want) == 4 * 125
-    for r in (res, PreprocessResult(tf=res.tf, tf_packed=res.tf_packed)):
-        np.testing.assert_allclose(
-            _hg_sorted(high_gamma_trace(r, 1.0, FINAL)), want,
-            rtol=1e-9, atol=1e-12)
+    for name, hg in _hg_tails(res, 1.0).items():
+        np.testing.assert_allclose(_hg_sorted(hg), want, rtol=1e-9,
+                                   atol=1e-12, err_msg=name)
 
 
 def test_high_gamma_trace_partition_stable(spark, dense):
@@ -243,14 +245,14 @@ def test_high_gamma_trace_partition_stable(spark, dense):
     try:
         for n in (7, 64):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            for fuse in (True, False):
-                res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                                 precision="double", fuse=fuse)
-                outs[n, fuse] = _hg_sorted(high_gamma_trace(res, 0.25, FINAL))
+            res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                             precision="double")
+            for name, hg in _hg_tails(res, 0.25).items():
+                outs[n, name] = _hg_sorted(hg)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    for fuse in (True, False):
-        np.testing.assert_array_equal(outs[7, fuse], outs[64, fuse])
+    for name in ("fused", "packed"):
+        np.testing.assert_array_equal(outs[7, name], outs[64, name])
 
 
 @pytest.mark.parametrize("post_resample_rate", [None, 200.0])

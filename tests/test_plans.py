@@ -3,6 +3,8 @@ the actual physical plan. A change that silently blocks predicate pushdown,
 flips a broadcast join to sort-merge, drops map-side partial aggregation, or
 adds a repacking shuffle to the pipeline fails here — at test scale — rather
 than at 100 TB."""
+import re
+
 import pytest
 
 from process_nwb_spark.plans.inspect import (count_exchanges, count_scans,
@@ -75,12 +77,13 @@ def test_pipeline_two_shuffles(spark):
 
 
 @pytest.mark.parametrize("kw", [
-    {}, {"abs_only": False, "final_resample_rate": None}, {"fuse": False}],
-    ids=["default", "phase", "unfused"])
+    {}, {"abs_only": False, "final_resample_rate": None}],
+    ids=["default", "phase"])
 def test_pipeline_crosses_by_arrow_only(spark, kw):
     """Every preprocess plan (output, packed output and each lineage
-    stage) crosses into Python by the Arrow maps only; the fused plans
-    keep exactly 2 shuffles."""
+    stage) crosses into Python by the Arrow maps only; the output keeps
+    exactly 2 shuffles, and the x1e6 scale runs in the row map, not as a
+    JVM array lambda over the packed values."""
     from process_nwb_spark import preprocess
     from process_nwb_spark.synth import generate_synthetic_data, to_long_df
 
@@ -91,8 +94,11 @@ def test_pipeline_crosses_by_arrow_only(spark, kw):
         plan = formatted_plan(df, "simple")
         assert "MapInPandas" not in plan, plan
         assert "FlatMapGroupsInPandas" not in plan, plan
-    if kw.get("fuse", True):
-        assert count_exchanges(res.tf) == 2, formatted_plan(res.tf, "simple")
+    plan = formatted_plan(res.tf, "simple")
+    assert count_exchanges(res.tf) == 2, plan
+    # the pack's order repair transforms its sorted (index, value)
+    # structs; any other transform( maps over the packed values
+    assert not re.search(r"transform\((?!array_sort\()", plan), plan
 
 
 def test_stft_is_one_shuffle(spark):

@@ -65,8 +65,7 @@ def test_preprocess_folder_all_steps_and_guards(spark, catalog_root):
         [catalog_root, "--rate", "1000", "--initial_resample_rate", "500",
          "--final_resample_rate", "250", "--all_steps"], spark=spark)
     # all_steps stores EVERY intermediate (the reference's
-    # store-everything mode), including the resampled series the fused
-    # plan never surfaces
+    # store-everything mode), including the resampled series
     assert set(written) == {"wvlt_amp_ECoG", "CAR_ln_downsampled_ECoG",
                             "downsampled_ECoG"}
     with pytest.raises(SystemExit):
