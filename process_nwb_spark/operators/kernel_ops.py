@@ -4,8 +4,10 @@ All operate on the *packed* layout (one row per channel, full time axis in
 an ARRAY<DOUBLE>) and cross into Python through Arrow only, by two maps:
 
 - the row map (`_map_values_arrow`, `mapInArrow`) — narrow: after the
-  single pack() shuffle, any chain of these runs pipelined inside one
-  stage, one crossing per operator (or one total with `fused_ops_arrow`);
+  single pack shuffle, any chain of these runs pipelined inside one
+  stage, one crossing per operator (or one total with `fused_ops_arrow`).
+  Fed `repack.gather`'s unordered rows, it first puts each channel in
+  sample order, so the pack's ordering costs no crossing of its own;
 - the per-series group map (`_car_group_map`, `applyInArrow`) — gathers a
   series' channels (or one segment of them) for the CAR, optionally
   followed by the wavelet.
@@ -30,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..dsp import kernels as K
-from .repack import KEYS
+from .repack import KEYS, order_samples
 
 PACKED_SCHEMA = "series_id STRING, channel INT, values ARRAY<DOUBLE>"
 WAVELET_SCHEMA = ("series_id STRING, channel INT, band INT, cf DOUBLE, "
@@ -123,12 +125,12 @@ def _values_rows(fn):
     return emit
 
 
-def _wavelet_bands(rate: float, filters: str, hg_only: bool, abs_only: bool,
-                   post_resample_rate: float | None, npad, precision: str):
-    """(cfs, sds, bands): bands(x) -> channel x's float64 |wavelet| arrays
-    in band order, post-resampled, and its np.angle arrays unless abs_only.
-    One K.wavelet_transform per channel (wavelet_transform.py:198-207,
-    403-424). The checks run on the driver at plan time, not in a job."""
+def wavelet_bank(rate: float, filters: str, hg_only: bool, abs_only: bool,
+                 post_resample_rate: float | None):
+    """(cfs, sds) float64 of the wavelet stage, after its argument checks
+    (phase must not be resampled; the bank must sit below Nyquist). Pure
+    Python on the driver, so a plan can run them before it builds any
+    DataFrame (pipelines.preprocess)."""
     if not abs_only and post_resample_rate is not None:
         raise ValueError("Wavelet phase should not be resampled.")
     from ..dsp.filterbank import band_params, check_nyquist
@@ -136,6 +138,17 @@ def _wavelet_bands(rate: float, filters: str, hg_only: bool, abs_only: bool,
     cfs, sds = (np.asarray(v, dtype=np.float64)
                 for v in band_params(filters, hg_only))
     check_nyquist(cfs, rate)
+    return cfs, sds
+
+
+def _wavelet_bands(rate: float, filters: str, hg_only: bool, abs_only: bool,
+                   post_resample_rate: float | None, npad, precision: str):
+    """(cfs, sds, bands): bands(x) -> channel x's float64 |wavelet| arrays
+    in band order, post-resampled, and its np.angle arrays unless abs_only.
+    One K.wavelet_transform per channel (wavelet_transform.py:198-207,
+    403-424)."""
+    cfs, sds = wavelet_bank(rate, filters, hg_only, abs_only,
+                            post_resample_rate)
 
     def bands(x):
         Xh, _, _, _ = K.wavelet_transform(
@@ -200,18 +213,29 @@ def _high_gamma_rows(n_baseline: int, rate: float, filters: str,
 def _map_values_arrow(df: DataFrame, emit,
                       schema: str = PACKED_SCHEMA) -> DataFrame:
     """The row map: each packed row's array goes to `emit` as a float64
-    view of the batch's flat buffer (no per-row copy on the way in)."""
+    view of the batch's flat buffer (no per-row copy on the way in).
+
+    It also takes `repack.gather`'s rows (`_v`, `_i` in arrival order) and
+    orders each channel by sample_idx (`repack.order_samples`) before
+    `emit`, so the pack's ordering rides this crossing instead of a JVM
+    sort or array lambda of its own."""
+    gathered = "_i" in df.columns
+    cols = ("_v", "_i") if gathered else ("values",)
 
     def run(batches):
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            flat, bounds = _list_col_to_numpy(batch.column(2))
-            yield from emit(batch.select(KEYS),
-                            [flat[bounds[i]:bounds[i + 1]]
-                             for i in range(batch.num_rows)])
+            flat, bounds = _list_col_to_numpy(batch.column(cols[0]))
+            xs = [flat[bounds[i]:bounds[i + 1]]
+                  for i in range(batch.num_rows)]
+            if gathered:
+                idx, ib = _list_col_to_numpy(batch.column("_i"))
+                xs = [order_samples(idx[ib[i]:ib[i + 1]], x)[1]
+                      for i, x in enumerate(xs)]
+            yield from emit(batch.select(KEYS), xs)
 
-    return df.select(*KEYS, "values").mapInArrow(run, schema)
+    return df.select(*KEYS, *cols).mapInArrow(run, schema)
 
 
 def _car_group_map(df: DataFrame, emit, schema: str, mean_frac: float,

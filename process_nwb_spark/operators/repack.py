@@ -9,12 +9,19 @@ fused kernels on the packed rows via narrow `mapInArrow` passes, and
 unpacks with `posexplode` (narrow). The default pipeline packs once; its
 other shuffle is the per-series CAR group (SURVEY.md §3/§7).
 
-Packing is pure Catalyst: collect_list of (sample_idx, value) structs +
-array_sort + transform — no Python crossing, stays in the JVM. A NULL
-sample packs as NaN at its own index, as in the relational CAR.
+Packing is two halves. `gather` is one `groupBy` that collects each
+channel's values and their sample_idx in the same aggregation; it combines
+map-side (`partial_collect_list`), so the exchange moves one array pair per
+(series, channel, map task), not one row per sample. The arrival order of
+collect_list is not a contract, so the time order is restored where the
+arrays next cross into Python anyway: the kernel row map
+(`kernel_ops._map_values_arrow`) orders each gathered channel with
+`order_samples` before its first kernel. A NULL sample packs as NaN at its
+own index, as in the relational CAR.
 """
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,57 +30,52 @@ from .car import _nan_safe_value
 KEYS = ("series_id", "channel")
 
 
-def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Long -> packed. One shuffle on (series_id, channel).
-
-    Time order comes from an explicit repartition on the group keys +
-    sortWithinPartitions on (keys, sample_idx), so in the common case
-    collect_list of the value column arrives already ordered. That
-    arrival order is NOT an API contract, though: ObjectHashAggregate
-    falls back to sort-based aggregation past
-    spark.sql.objectHashAggregate.sortBased.fallbackThreshold (default 128
-    in-memory groups per task — a regime real deployments hit, e.g.
-    1000 series x 256 ch over 2000 tasks), and the fallback's external
-    row sort is not stable, so within-group order can interleave.
-
-    So the sample_idx list is collected IN THE SAME aggregation (two
-    buffers updated and merged over the identical row sequence are
-    pairwise-consistent by construction), orderedness is verified with an
-    O(n) JVM `forall(zip_with(...))` pass, and only rows whose order was
-    actually broken pay the struct array_sort repair (CASE WHEN arms
-    evaluate lazily per row). Measured at 64 ch x 192k samples: ~11% over
-    the bare primitive collect_list, vs ~60% for the always-sort
-    struct formulation — and bitwise-correct with the fallback forced to
-    threshold=1 (tests/test_spark_operators.py::
-    test_pack_order_survives_sort_based_agg_fallback).
-
-    An Arrow-native pack (mapInArrow over the sorted shuffle output,
-    slicing contiguous key-runs with numpy) was built and measured
-    STRICTLY worse — 2.6 s vs 0.8 s at 8 series x 32 ch x 320k samples —
-    because the packed arrays then pay a full Python round-trip that the
-    JVM collect_list avoids entirely; the kernel crossings downstream are
-    where Arrow pays off (see operators/kernel_ops._map_values_arrow).
-    """
-    agg = (
-        df.repartition(*KEYS)
-        .sortWithinPartitions(*KEYS, "sample_idx")
-        .groupBy(*KEYS)
+def gather(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """Long -> one row per (series_id, channel) holding its values `_v`
+    and their sample indices `_i`, in no particular order. Both lists are
+    collected in the same aggregation, so they stay pairwise aligned
+    through the map-side partials and the merge."""
+    return df.groupBy(*KEYS).agg(
         # NULL -> NaN: collect_list skips a NULL value but would keep its
         # sample_idx, shifting every later sample one index earlier
-        .agg(F.collect_list(_nan_safe_value(value_col)).alias("_v"),
-             F.collect_list("sample_idx").alias("_i"))
-    )
-    n = F.size("_i")
-    ordered = F.forall(
-        F.zip_with(F.slice("_i", 1, n - 1), F.slice("_i", 2, n - 1),
-                   lambda a, b: a < b),
-        lambda x: x)
-    repaired = F.transform(
-        F.array_sort(F.arrays_zip(F.col("_i"), F.col("_v"))),
-        lambda s: s["_v"])
-    return agg.select(
-        *KEYS,
-        F.when(ordered, F.col("_v")).otherwise(repaired).alias("values"))
+        F.collect_list(_nan_safe_value(value_col)).alias("_v"),
+        F.collect_list("sample_idx").alias("_i"))
+
+
+def order_samples(idx: np.ndarray, x: np.ndarray):
+    """(idx, x) sorted by (sample_idx, value): the one ordering rule for
+    gathered samples, whole-channel and segmented alike. Input already
+    strictly increasing in idx (the common case) is returned as it is,
+    after one O(n) check; ties in idx, which only broken input has, are
+    ordered by value with NaN last."""
+    idx = np.asarray(idx)
+    x = np.asarray(x, dtype=np.float64)
+    if len(idx) > 1 and not (idx[1:] > idx[:-1]).all():
+        order = np.lexsort((x, idx))
+        idx, x = idx[order], x[order]
+    return idx, x
+
+
+def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """Long -> packed (series_id, channel, values) in sample order: one
+    shuffle on (series_id, channel), then the identity row map.
+
+    `gather` shuffles map-side partial arrays, and the row map orders each
+    channel in NumPy (`order_samples`). ObjectHashAggregate's sort-based
+    fallback (past spark.sql.objectHashAggregate.sortBased.fallbackThreshold,
+    128 in-memory groups per task by default) can interleave a group's
+    arrival order; the order is restored all the same
+    (tests/test_spark_operators.py::
+    test_pack_order_survives_sort_based_agg_fallback).
+
+    The pipeline itself does not call this: it hands `gather`'s rows
+    straight to its first kernel row map, so the ordering costs no Python
+    crossing of its own. That is why an earlier measurement, in which an
+    Arrow-side pack cost a full extra round trip of the packed arrays and
+    ran 3x slower than the JVM pack, no longer applies."""
+    from .kernel_ops import fused_ops_arrow
+
+    return fused_ops_arrow(gather(df, value_col))
 
 
 def unpack(df: DataFrame, values_col: str = "values",

@@ -33,7 +33,7 @@ measured 0.109 abs error on a unit tone at the worst-case fixture rates).
 Inputs are assumed gapless per (series, channel) starting at sample_idx
 0; violations raise inside the kernel instead of silently dropping or
 misplacing core samples. A NULL sample gathers as NaN at its own index,
-as in `repack.pack`.
+as in `repack.gather`.
 
 Reference analog: the pad/trim machinery (utils.py:106-167) is reused
 unchanged inside each segment; the chunked writer
@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from ..dsp import kernels as K
 from .car import _nan_safe_value
 from .kernel_ops import _list_col_to_numpy, _pack_list_array
-from .repack import KEYS, unpack
+from .repack import KEYS, order_samples, unpack
 
 SEGMENT_SCHEMA = ("series_id STRING, channel INT, seg BIGINT, g0 BIGINT, "
                   "values ARRAY<DOUBLE>")
@@ -117,7 +117,7 @@ def gather_segments(signals: DataFrame, L: int, V: int,
                     meta_cols: tuple[str, ...] = ()) -> DataFrame:
     """Long rows -> one row per (series_id, channel, seg) holding the
     segment's values `_v` and their sample indices `_i`, both collected in
-    the same aggregation, as repack.pack does (so the two lists stay
+    the same aggregation, as repack.gather does (so the two lists stay
     pairwise aligned; their order is not a contract and the consumer
     sorts). Sample i joins every segment s >= 0 with
     s*L - V <= i < (s+1)*L + V: at most three, since V < L.
@@ -142,8 +142,9 @@ def _segment_output(seg: int, idx: np.ndarray, x: np.ndarray, fn, L: int,
                     V: int, r: Fraction, where: str):
     """Run `fn` on one segment's samples and trim to its core's output:
     returns (g0, kept 2-D ndarray (n_kept, n_cols)). `idx`/`x` may arrive
-    in any order; they are sorted by idx here. `where` names the
-    (series, channel) in error messages.
+    in any order; they are sorted here by repack.order_samples, the
+    whole-channel row map's rule. `where` names the (series, channel) in
+    error messages.
 
     The overlap/core index math lives ONLY here, in EXACT integer
     arithmetic on the rational ratio `r` — float `core * r` can land one
@@ -159,8 +160,7 @@ def _segment_output(seg: int, idx: np.ndarray, x: np.ndarray, fn, L: int,
         raise ValueError(
             f"segmented kernel: segment {seg} of {where} holds {len(x)} "
             f"values for {len(idx)} sample indices")
-    order = np.argsort(idx, kind="stable")
-    idx, x = idx[order], np.asarray(x, dtype=np.float64)[order]
+    idx, x = order_samples(idx, x)
     # strictly consecutive, not just span==count: a duplicated index
     # would mask a missing one and the kernel would silently run over a
     # misaligned buffer

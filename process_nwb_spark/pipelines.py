@@ -14,23 +14,27 @@ resample.py:196, pipelines.py:148, wavelet_transform.py:389), the catalog
 analog of the NWB processing module.
 
 Physical plan (2 shuffles on the packed layout — SURVEY.md §3, improved):
-  pack (shuffle 1: long rows -> one array row per channel) ->
-  [resample+notch fused kernel, narrow] ->
+  gather (shuffle 1: map-side partial collect_list, so it moves one
+  array pair per (series, channel, map task), not one row per sample) ->
+  [order + x1e6 scale + resample + notch in one Arrow row map, narrow] ->
   packed CAR (shuffle 2: n_channels array rows per series — NOT the long
   rows; the relational window CAR would shuffle n_time*n_channels rows) ->
   wavelet kernel in the same group map (fans out to bands) -> unpack.
 `high_gamma_trace` swaps the band emitter for the high-gamma one (baseline
 z-score + band mean in NumPy, one row per channel) and unpacks that: the
 tutorial's tail adds no shuffle. Both kernel crossings are Arrow-native
-(operators/kernel_ops.py). The x1e6 scale is the row map's first function.
-This is the only whole-channel plan: the `downsampled` lineage stage is
-the same row map stopped after the resample, built lazily, so it costs
-nothing unless `all_steps` stores it.
+(operators/kernel_ops.py); the row map sorts each gathered channel by
+sample_idx before its first kernel, so the pack has no JVM sort or array
+lambda. This is the only whole-channel plan. `preprocess` builds the
+gather and the row map; every lineage stage (`downsampled` is the same
+row map stopped after the resample) is built on first access, so a pass
+builds only what it runs.
 """
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from functools import partial
+from collections.abc import Mapping
+from dataclasses import dataclass
+from functools import cache, partial
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -39,22 +43,57 @@ from pyspark.sql import functions as F
 from .dsp import kernels as K
 from .operators.car import subtract_car_packed
 from .operators.kernel_ops import (car_high_gamma_arrow, car_wavelet_arrow,
-                                   fused_ops_arrow)
-from .operators.repack import pack, unpack
+                                   fused_ops_arrow, wavelet_bank)
+from .operators.repack import gather, unpack
 from .operators.zscore import high_gamma_segments
 
 SCALING = 1e6  # V -> uV, resample.py:11
 
 
-@dataclass
+class Stages(Mapping):
+    """Read-only lineage name -> DataFrame mapping. Each stage is built on
+    first access and then cached, so a pass pays plan construction (and
+    Spark's analysis) only for the stages it reads; names, `in` and
+    `len` never build one."""
+
+    def __init__(self, builders: dict[str, Callable[[], DataFrame]]):
+        self._build = dict(builders)
+        self._built: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            self._built[name] = self._build[name]()
+        return self._built[name]
+
+    def __contains__(self, name) -> bool:
+        return name in self._build
+
+    def __iter__(self):
+        return iter(self._build)
+
+    def __len__(self) -> int:
+        return len(self._build)
+
+
+@dataclass(frozen=True)
 class PreprocessResult:
-    """Lazily-composed stage DataFrames, lineage-named like the reference."""
-    tf: DataFrame                       # long (series_id, channel, band, cf, sd, sample_idx, amp)
+    """Lazily-built stage DataFrames, lineage-named like the reference."""
+    stages: Mapping[str, DataFrame]
     # n_baseline -> packed high-gamma rows (series_id, channel, values
     # ARRAY, plus `g0` on the segmented path)
     high_gamma: Callable[[int], DataFrame]
-    stages: dict = field(default_factory=dict)
-    tf_packed: DataFrame | None = None  # (series_id, channel, band, cf, sd, amp ARRAY)
+    # -> (series_id, channel, band, cf, sd, amp ARRAY[, phase ARRAY]);
+    # None on the segmented path
+    build_tf_packed: Callable[[], DataFrame] | None = None
+
+    @property
+    def tf(self) -> DataFrame:
+        """long (series_id, channel, band, cf, sd, sample_idx, amp)"""
+        return self.stages["wvlt_amp"]
+
+    @property
+    def tf_packed(self) -> DataFrame | None:
+        return self.build_tf_packed() if self.build_tf_packed else None
 
     def materialize(self, spark, base_name: str = "ECoG"):
         """`all_steps` analog: register every stage as a temp view with the
@@ -75,12 +114,18 @@ def preprocess(signals: DataFrame, rate: float,
     """The default pipeline on a long signals DataFrame
     (series_id, channel, sample_idx, value). Parity: pipelines.py:15-111.
 
-    The two kernel crossings — resample+notch and CAR->wavelet — run
-    through the Arrow operators (mapInArrow / applyInArrow): signal arrays
-    cross as flat float64 buffers + offsets in both directions. (An
-    Arrow-native pack was also tried and measured STRICTLY worse — 2.6 s
-    vs 0.8 s for the JVM collect_list pack — because it pays a full extra
-    Python round-trip of the packed arrays.)
+    The two kernel crossings — (order+)scale+resample+notch and
+    CAR->wavelet — run through the Arrow operators (mapInArrow /
+    applyInArrow): signal arrays cross as flat float64 buffers + offsets
+    in both directions. The first crossing takes the gathered, unordered
+    channel arrays and orders them itself (repack.gather/order_samples),
+    so the pack is one map-side-combined shuffle with no JVM sort.
+
+    Only the gathered input and that row map are built here; every
+    lineage stage, `tf` and `tf_packed` are built on first access
+    (`Stages`), so `high_gamma_trace` builds one row map and one group
+    map. Argument errors (phase with a final resample, a filter bank
+    above Nyquist, segment geometry) still raise from this call.
 
     `segmented=True` (or any explicit `seg_len`) routes the whole pipeline
     through the overlap-segmented operators (operators/segmented.py): no
@@ -104,7 +149,10 @@ def preprocess(signals: DataFrame, rate: float,
             filters=filters, hg_only=hg_only, mean_frac=mean_frac,
             scaling=scaling, precision=precision, seg_len=seg_len,
             seg_overlap=seg_overlap)
-    packed = pack(signals)
+    # the wavelet stage is built lazily; its argument checks are not
+    wavelet_bank(initial_resample_rate, filters, hg_only, abs_only,
+                 final_resample_rate)
+    gathered = gather(signals)
 
     def scale(x):
         return x * scaling
@@ -113,42 +161,45 @@ def preprocess(signals: DataFrame, rate: float,
         return K.resample(x, initial_resample_rate, rate, precision=precision)
 
     ds = fused_ops_arrow(
-        packed, scale, resample,
+        gathered, scale, resample,
         lambda x: K.apply_linenoise_notch(x, initial_resample_rate,
                                           precision=precision))
-    # The lineage stages stay separately addressable (lazy — each pays only
-    # if materialized); the pipeline output itself uses the fused
-    # CAR->wavelet kernel below (one Python crossing for both).
-    stages: dict[str, DataFrame] = {
-        "downsampled": unpack(fused_ops_arrow(packed, scale, resample)),
-        # dense CAR on packed rows: shuffle = n_channels array rows/series
-        "CAR_ln_downsampled": unpack(subtract_car_packed(
-            ds, mean_frac=mean_frac, precision=precision)),
-    }
-    wv = car_wavelet_arrow(ds, initial_resample_rate, mean_frac=mean_frac,
-                           filters=filters, hg_only=hg_only,
-                           abs_only=abs_only,
-                           post_resample_rate=final_resample_rate,
-                           precision=precision)
     high_gamma = partial(car_high_gamma_arrow, ds, initial_resample_rate,
                          mean_frac=mean_frac, filters=filters,
                          hg_only=hg_only,
                          post_resample_rate=final_resample_rate,
                          precision=precision)
-    tf = unpack(wv.drop("phase"), values_col="amp", value_col="amp",
-                extra_keys=("band", "cf", "sd"))
-    stages["wvlt_amp"] = tf
+
+    @cache
+    def wv() -> DataFrame:
+        return car_wavelet_arrow(ds, initial_resample_rate,
+                                 mean_frac=mean_frac, filters=filters,
+                                 hg_only=hg_only, abs_only=abs_only,
+                                 post_resample_rate=final_resample_rate,
+                                 precision=precision)
+
+    def band_stage(col: str, other: str) -> Callable[[], DataFrame]:
+        return lambda: unpack(wv().drop(other), values_col=col,
+                              value_col=col, extra_keys=("band", "cf", "sd"))
+
+    builders = {
+        "downsampled": lambda: unpack(
+            fused_ops_arrow(gathered, scale, resample)),
+        # dense CAR on packed rows: shuffle = n_channels array rows/series
+        "CAR_ln_downsampled": lambda: unpack(subtract_car_packed(
+            ds, mean_frac=mean_frac, precision=precision)),
+        "wvlt_amp": band_stage("amp", "phase"),
+    }
     if not abs_only:
         # the reference stores phase as its own wvlt_phase_ series
         # (wavelet_transform.py:422-436); dropping it unconditionally
         # would make abs_only=False pay the np.angle computation and then
         # discard the result
-        stages["wvlt_phase"] = unpack(
-            wv.drop("amp"), values_col="phase", value_col="phase",
-            extra_keys=("band", "cf", "sd"))
-    return PreprocessResult(tf=tf, high_gamma=high_gamma, stages=stages,
-                            tf_packed=wv if not abs_only
-                            else wv.drop("phase"))
+        builders["wvlt_phase"] = band_stage("phase", "amp")
+    return PreprocessResult(
+        stages=Stages(builders), high_gamma=high_gamma,
+        build_tf_packed=wv if not abs_only
+        else cache(lambda: wv().drop("phase")))
 
 
 def _snap_seg_len(base: int, new_freq: float, old_freq: float) -> int:
@@ -208,17 +259,20 @@ def _preprocess_segmented(signals: DataFrame, rate: float,
     from .dsp.filterbank import band_params
 
     cfs, sds = band_params(filters, hg_only)
-    cf_arr = F.array(*[F.lit(float(c)) for c in cfs])
-    sd_arr = F.array(*[F.lit(float(s)) for s in sds])
     bands = f["bands"]
-    tf = unpack(bands.select(
-        *bands.columns,
-        F.element_at(cf_arr, F.col("band") + 1).alias("cf"),
-        F.element_at(sd_arr, F.col("band") + 1).alias("sd")),
-        values_col="amp", value_col="amp", extra_keys=("band", "cf", "sd"),
-        offset_col="g0")
+
+    def tf() -> DataFrame:
+        cf_arr = F.array(*[F.lit(float(c)) for c in cfs])
+        sd_arr = F.array(*[F.lit(float(s)) for s in sds])
+        return unpack(bands.select(
+            *bands.columns,
+            F.element_at(cf_arr, F.col("band") + 1).alias("cf"),
+            F.element_at(sd_arr, F.col("band") + 1).alias("sd")),
+            values_col="amp", value_col="amp",
+            extra_keys=("band", "cf", "sd"), offset_col="g0")
+
     return PreprocessResult(
-        tf=tf, stages={"CAR_ln_downsampled": f["car"], "wvlt_amp": tf},
+        stages=Stages({"CAR_ln_downsampled": f["car"], "wvlt_amp": tf}),
         high_gamma=partial(high_gamma_segments, bands))
 
 
@@ -228,9 +282,9 @@ def _segmented_frames(signals: DataFrame, rate: float,
                       mean_frac: float, scaling: float, precision: str,
                       seg_len: int | None, seg_overlap: int) -> dict:
     """The segmented pipeline's packed stages (see _preprocess_segmented):
-    "cores" (stage-A segment cores), "car" (the CAR'd signal, long),
-    "pieces" (stage-B segment pieces) and "bands" (stage-B band rows with
-    `g0`), plus the segment geometry."""
+    "cores" (stage-A segment cores), "car" (a builder of the CAR'd
+    signal, long), "pieces" (stage-B segment pieces) and "bands" (stage-B
+    band rows with `g0`), plus the segment geometry."""
     from fractions import Fraction
 
     import numpy as np
@@ -317,8 +371,8 @@ def _segmented_frames(signals: DataFrame, rate: float,
                            stage_b, seg_b, ov_b, ratio=fr2,
                            meta_cols=("_n_time",))
     return {"cores": cores, "pieces": pieces, "bands": bands,
-            "car": unpack(car(_values_rows(lambda x: x), SEGMENT_SCHEMA),
-                          offset_col="g0"),
+            "car": lambda: unpack(car(_values_rows(lambda x: x),
+                                      SEGMENT_SCHEMA), offset_col="g0"),
             "geometry": {"seg_a": seg_a, "ov_a": ov_a, "seg_b": seg_b,
                          "ov_b": ov_b, "fr1": fr1, "fr2": fr2}}
 

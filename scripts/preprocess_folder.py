@@ -94,6 +94,8 @@ def main(argv=None, spark=None) -> dict:
     # collapsing distinct recordings into one interleaved signal. Two
     # single-series tables may also share the same inner series_id (the
     # default landing name), so the table prefix is what keeps them apart.
+    from dataclasses import replace
+
     from pyspark.sql import functions as F
 
     from process_nwb_spark.pipelines import preprocess
@@ -111,7 +113,8 @@ def main(argv=None, spark=None) -> dict:
     # --all_steps mirrors the reference's store-everything mode
     # (pipelines.py:69-80 stores the resampled series too): every lineage
     # stage of the whole-channel plan is written, 'downsampled' included.
-    # Each stage is lazy, so only a stored one is computed.
+    # Each stage is built on first access, so only a stored one is planned
+    # and computed.
     if args.seg_len is not None and args.all_steps:
         raise SystemExit("--seg_len routes through the segmented plan, "
                          "which has no 'downsampled' stage for "
@@ -123,9 +126,11 @@ def main(argv=None, spark=None) -> dict:
                      hg_only=not args.all_filters,
                      segmented=args.seg_len is not None,
                      seg_len=args.seg_len)
-    if not args.all_steps:       # store only the wavelet amplitudes
-        res.stages = {k: v for k, v in res.stages.items()
-                      if k.startswith("wvlt_amp")}
+    if not args.all_steps:
+        # store only the wavelet amplitudes; names are picked before any
+        # stage is built, so the other stages are never planned
+        res = replace(res, stages={k: res.stages[k] for k in res.stages
+                                   if k.startswith("wvlt_amp")})
     written = save_preprocess_result(cat, res, base_name=args.acq_name)
     for name, path in sorted(written.items()):
         print(f"stored {name} -> {path}")

@@ -52,6 +52,50 @@ def test_downsampled_stage_matches_kernel(spark, dense):
     np.testing.assert_allclose(got.reshape(want.shape), want, rtol=1e-12)
 
 
+def test_pipeline_scrambled_input_bitwise(spark, dense):
+    """Rows ordered by value and spread over 7 partitions give the same
+    band table and high-gamma trace, bit for bit, as time-ordered input:
+    the row map restores each channel's sample order before any kernel."""
+    ordered = to_long_df(spark, dense)
+    scrambled = ordered.orderBy("value").repartition(7)
+    outs = []
+    for df in (ordered, scrambled):
+        res = preprocess(df, RATE, INIT, FINAL, precision="double")
+        outs.append((res.tf.toPandas()
+                     .sort_values(["channel", "band", "sample_idx"])
+                     .amp.to_numpy(),
+                     _hg_sorted(high_gamma_trace(res, 0.25, FINAL))))
+    for got, want in zip(outs[1], outs[0]):
+        np.testing.assert_array_equal(got, want)
+
+
+def test_high_gamma_trace_builds_only_its_maps(spark, monkeypatch):
+    """preprocess builds the gather and the row map; high_gamma_trace adds
+    the group map. No lineage stage it does not run is built, and an
+    argument error raises before any map is."""
+    from collections import Counter
+
+    X = generate_synthetic_data(1.0, 4, 1000.0, seed=0)
+    df = to_long_df(spark, X)
+    calls = Counter()
+
+    def count(cls, name):
+        orig = getattr(cls, name)
+
+        def wrapped(self, *a, **kw):
+            calls[name] += 1
+            return orig(self, *a, **kw)
+        monkeypatch.setattr(cls, name, wrapped)
+
+    count(type(df), "mapInArrow")
+    count(type(df.groupBy("series_id")), "applyInArrow")
+    with pytest.raises(ValueError):        # rat bank above Nyquist of 400
+        preprocess(df, 1000.0, 400.0, 200.0, hg_only=False)
+    assert calls == Counter(), calls
+    high_gamma_trace(preprocess(df, 1000.0, 500.0, 250.0), 0.25, 250.0)
+    assert calls == Counter(mapInArrow=1, applyInArrow=1), calls
+
+
 def test_float32_default_within_reference_tolerance(spark, dense):
     """precision='single' (the reference default) agrees with the float64
     path within the reference's own chunked tolerance rtol=0.01

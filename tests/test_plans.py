@@ -81,9 +81,9 @@ def test_pipeline_two_shuffles(spark):
     ids=["default", "phase"])
 def test_pipeline_crosses_by_arrow_only(spark, kw):
     """Every preprocess plan (output, packed output and each lineage
-    stage) crosses into Python by the Arrow maps only; the output keeps
-    exactly 2 shuffles, and the x1e6 scale runs in the row map, not as a
-    JVM array lambda over the packed values."""
+    stage) crosses into Python by the Arrow maps only and evaluates no
+    JVM array lambda: the x1e6 scale and the pack's time order both run
+    in the row map. The output keeps exactly 2 shuffles."""
     from process_nwb_spark import preprocess
     from process_nwb_spark.synth import generate_synthetic_data, to_long_df
 
@@ -92,13 +92,33 @@ def test_pipeline_crosses_by_arrow_only(spark, kw):
                      **{"final_resample_rate": 250.0, **kw})
     for df in (res.tf, res.tf_packed, *res.stages.values()):
         plan = formatted_plan(df, "simple")
-        assert "MapInPandas" not in plan, plan
-        assert "FlatMapGroupsInPandas" not in plan, plan
-    plan = formatted_plan(res.tf, "simple")
-    assert count_exchanges(res.tf) == 2, plan
-    # the pack's order repair transforms its sorted (index, value)
-    # structs; any other transform( maps over the packed values
-    assert not re.search(r"transform\((?!array_sort\()", plan), plan
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "transform(",
+                     "lambdafunction"):
+            assert node not in plan, (node, plan)
+    assert count_exchanges(res.tf) == 2, formatted_plan(res.tf, "simple")
+
+
+def test_pack_shuffles_arrays_not_samples(spark):
+    """The pack combines map-side: the high-gamma plan's first exchange
+    sits above a partial_collect_list ObjectHashAggregate, so it moves
+    one array pair per (series, channel, map task), and nothing below it
+    sorts or repartitions the per-sample rows."""
+    from process_nwb_spark import high_gamma_trace, preprocess
+    from process_nwb_spark.synth import generate_synthetic_data, to_long_df
+
+    X = generate_synthetic_data(1.0, 4, 1000.0, seed=0)
+    hg = high_gamma_trace(preprocess(to_long_df(spark, X), 1000.0, 500.0,
+                                     250.0), 0.25, 250.0)
+    plan = formatted_plan(hg, "simple")
+    lines = plan.splitlines()
+    first = max(i for i, ln in enumerate(lines)
+                if re.search(r"\bExchange\b", ln))   # deepest = runs first
+    below = lines[first + 1:]
+    assert "REPARTITION_BY_COL" not in lines[first], plan
+    assert any("ObjectHashAggregate" in ln and "partial_collect_list" in ln
+               for ln in below), plan
+    assert not any(re.search(r"\bSort\b", ln) for ln in below), plan
+    assert "RepartitionByExpression" not in formatted_plan(hg, "extended")
 
 
 def test_stft_is_one_shuffle(spark):
